@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** Curated headline subset for the one-line JSON report: every operator
@@ -42,48 +42,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.withScratchLocalDir(SparkSession.builder(), s"local[$cpus]")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts encoding drifts between corpus drops (TIMESTAMP(NANOS)
-      // nanos-long / TIMESTAMP_MICROS NTZ); nanosAsLong covers the legacy
-      // form and Tables.loadEvents normalizes whatever is stored
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // JVM-wide compiled-codegen cache (STATIC conf, read once at first
-      // codegen): the default 100 entries thrashes under a many-query
-      // session — every cache miss is a fresh Janino compile on the task
-      // path (measured: x_dbscan -47%, x_mmr_rerank -33% at sf0.1 from
-      // this alone). Sized for one long-lived JVM running the full query
-      // surface; compiled classes are small, heap cost is negligible.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine extensions registered ONCE, before any query: no per-query
-    // session mutation, no run-order coupling (s8's own register is an
-    // idempotent no-op after this)
-    graft.plans.TsRangePushdown.register(spark)
+    val spark = GraftSession.local(GraftSession.envThreads(32), "Bench")
+    def run(fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] =
+      CacheScope.timed(spark)(fn(spark, sfDir).count())
     // warmup pass: JIT, codegen compilation, FS cache — report steady state
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-      CacheScope.drain()         // operator-internal caches are registered;
-      spark.catalog.clearCache() // clearCache stays as the backstop — leaked
-    }                            // entries distort every later measurement
+    SparkEntry.queries.foreach { case (_, fn) => run(fn) }
     // A failed query is recorded, not silently timed: side-effecting entries
     // (bucketed writes, the streaming run, the sync rewrite) that break must
     // be distinguishable from fast ones in the BENCH output.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      val r =
-        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => Left(e.getClass.getSimpleName) }
-      CacheScope.drain()
-      spark.catalog.clearCache()
-      r
-    }
+    def timeOnce(fn: (SparkSession, String) => DataFrame): Either[String, Double] =
+      run(fn).left.map(_.getClass.getSimpleName)
     // best of three timed passes: GC/scheduling noise on a shared box dwarfs
     // per-query time at this scale (co-tenant load spikes of 10×+ observed).
     // SPARK_GRAFT_BENCH_PASSES=1 for the one-pass sf1 artifact (BENCH_SF1),

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scaling-slope report: time every query at sf0.01, sf0.1 and (when
   * `SPARK_GRAFT_SF_XL` points at a [[MakeScale]]-generated corpus) sf1 in
@@ -42,47 +42,18 @@ object BenchScaling {
     val only: Option[Set[String]] = if (args.nonEmpty) Some(args.toSet) else None
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT", "/root/repo/BENCH_SCALING.json")
     def queries = SparkEntry.queries.filter(q => only.forall(_.contains(q._1)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.withScratchLocalDir(SparkSession.builder(), s"local[$cpus]")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // JVM-wide compiled-codegen cache (STATIC conf, read once at first
-      // codegen): the default 100 entries thrashes under a many-query
-      // session — every cache miss is a fresh Janino compile on the task
-      // path (measured: x_dbscan -47%, x_mmr_rerank -33% at sf0.1 from
-      // this alone). Sized for one long-lived JVM running the full query
-      // surface; compiled classes are small, heap cost is negligible.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TsRangePushdown.register(spark)
+    val spark = GraftSession.local(GraftSession.envThreads(32), "BenchScaling")
     val dirs = Seq(small, large) ++ xl
-    def timeBest(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def run(fn: (SparkSession, String) => DataFrame, dir: String): Either[Throwable, Double] =
+      CacheScope.timed(spark)(fn(spark, dir).count())
+    def timeBest(fn: (SparkSession, String) => DataFrame,
                  dir: String, passes: Int): Either[String, Double] = {
-      val ts = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        val r =
-          try { fn(spark, dir).count(); Right((System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable => Left(e.getClass.getSimpleName) }
-        CacheScope.drain()
-        spark.catalog.clearCache()
-        r
-      }
+      val ts = (1 to passes).map(_ => run(fn, dir).left.map(_.getClass.getSimpleName))
       ts.collectFirst { case Left(e) => Left(e) }
         .getOrElse(Right(ts.collect { case Right(t) => t }.min))
     }
     // warmup every SF (JIT, codegen, FS cache), then best-of-2 timed each
-    queries.foreach { case (_, fn) =>
-      dirs.foreach { d =>
-        try { fn(spark, d).count(); () } catch { case _: Throwable => () }
-        CacheScope.drain()
-        spark.catalog.clearCache()
-      }
-    }
+    queries.foreach { case (_, fn) => dirs.foreach(run(fn, _)) }
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val rows = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       (name, dirs.map(d => timeBest(fn, d, 2)))

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for local development and tests.
-  *
-  * The production driver (Verify/Bench) builds its own session; this one
-  * mirrors it but picks settings designed to scale: AQE on (runtime
-  * re-planning, skew-join splitting), shuffle partitions sized to the
-  * parallelism rather than the Spark default of 200.
+/** The engine's one session factory: every main (Bench, BenchScaling,
+  * Verify, Scratch, Explain, MakeScale), the test suite and the pipeline
+  * benchmark get their session from [[local]], so how a session is
+  * configured is decided here and nowhere else. Settings are chosen to
+  * scale: AQE on (runtime re-planning, skew-join splitting), shuffle
+  * partitions sized to the parallelism rather than the Spark default of
+  * 200, and the engine's optimizer rule registered exactly once.
   */
 object GraftSession {
 
@@ -60,38 +61,44 @@ object GraftSession {
     }
   }
 
-  /** Delete scratch subdirs whose mtime is older than [[StaleScratchMs]] —
-    * crashed JVMs leave their spark-* dirs behind, and on tmpfs those
-    * orphans occupy RAM until something removes them. Live runs touch
-    * their dirs constantly, so an age threshold of hours cannot hit one.
+  /** Delete the subdirs of `root` in which nothing is newer than
+    * [[StaleScratchMs]] — crashed JVMs leave their spark-* dirs behind, and
+    * on tmpfs those orphans occupy RAM until something removes them. Age
+    * is the NEWEST mtime anywhere in the tree, not the top-level dir's:
+    * shuffle writes land in nested `blockmgr-<uuid>/NN` dirs and leave the
+    * top-level mtime untouched, so a live run older than the threshold
+    * must not lose its scratch. The walk stops at the first fresh entry.
     */
-  private def sweepStale(root: java.io.File): Unit = {
+  private[graft] def sweepStale(root: java.io.File): Unit = {
     val cutoff = System.currentTimeMillis() - StaleScratchMs
-    val kids = root.listFiles()
-    if (kids != null) kids.foreach { f =>
-      if (f.lastModified() < cutoff) deleteRecursively(f)
+    def fresh(f: java.io.File): Boolean =
+      f.lastModified() >= cutoff || Option(f.listFiles()).exists(_.exists(fresh))
+    Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
+      if (!fresh(f)) LocalFs.deleteRecursively(f)
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Apply [[scratchLocalDir]] to a session builder (no-op when the master
     * is not local or the environment already configures scratch dirs).
-    * `master` must be the same string the caller passes to `.master(...)`
-    * — the builder API gives no way to read it back, so the gate takes it
-    * explicitly.
     */
-  def withScratchLocalDir(b: SparkSession.Builder, master: String): SparkSession.Builder =
+  private def withScratchLocalDir(b: SparkSession.Builder, master: String): SparkSession.Builder =
     scratchLocalDir(master).fold(b)(d => b.config("spark.local.dir", d))
 
+  /** Thread count for a harness main: `SPARK_GRAFT_CPUS` when set, else
+    * the main's own default.
+    */
+  def envThreads(default: Int): Int = sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** Local-master session on `threads` cores (`getOrCreate`: a second call
+    * in the same JVM returns the first session). The engine's optimizer
+    * rule is registered here ONCE, before any query: no per-query session
+    * mutation, no run-order coupling (s8's own register is an idempotent
+    * no-op after this).
+    */
   def local(threads: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = withScratchLocalDir(SparkSession
-      .builder(), s"local[$threads]")
-      .master(s"local[$threads]")
+    val master = s"local[$threads]"
+    val spark = withScratchLocalDir(SparkSession.builder(), master)
+      .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", threads.toString)
       .config("spark.sql.adaptive.enabled", "true")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scaler: tiles an existing testdata SF directory
@@ -38,14 +38,7 @@ object MakeScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val tiles = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, "MakeScale")
     new java.io.File(out).mkdirs()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
@@ -76,11 +69,7 @@ object MakeScale {
       val dst = new java.io.File(s"$out/$t.parquet")
       dst.delete()
       if (!part.renameTo(dst)) sys.error(s"rename failed for $t")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
+      LocalFs.deleteRecursively(new java.io.File(tmp))
       println(s"$t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
     }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,42 +11,15 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = GraftSession.withScratchLocalDir(SparkSession.builder(), s"local[$cpus]")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts encoding drifts between corpus drops (TIMESTAMP(NANOS)
-      // nanos-long / TIMESTAMP_MICROS NTZ); nanosAsLong covers the legacy
-      // form and Tables.loadEvents normalizes whatever is stored
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // JVM-wide compiled-codegen cache (STATIC conf, read once at first
-      // codegen): the default 100 entries thrashes under a many-query
-      // session — every cache miss is a fresh Janino compile on the task
-      // path (measured: x_dbscan -47%, x_mmr_rerank -33% at sf0.1 from
-      // this alone). Sized for one long-lived JVM running the full query
-      // surface; compiled classes are small, heap cost is negligible.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine extensions registered ONCE, before any query: no per-query
-    // session mutation, no run-order coupling (s8's own register is an
-    // idempotent no-op after this)
-    graft.plans.TsRangePushdown.register(spark)
+    val spark = GraftSession.local(GraftSession.envThreads(16), "Verify")
     new java.io.File(outDir).mkdirs()
+    // some operators cache() internally (registered via CacheScope); timed
+    // drains after every query, so the CacheManager never holds every
+    // query's blocks for the whole 400+-query dump
     SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // some operators cache() internally (registered via CacheScope);
-      // without this the CacheManager holds every query's blocks for the
-      // whole 400+-query dump (the Bench per-query discipline)
-      CacheScope.drain()
-      spark.catalog.clearCache()
+      CacheScope.timed(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
+        .left.foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

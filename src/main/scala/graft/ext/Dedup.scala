@@ -523,18 +523,17 @@ object Dedup {
     }
     // small-star: for each u over its smaller neighbors Γ⁻(u), m = min(Γ⁻(u));
     // emit (v, m) ∀ v∈Γ⁻(u) plus (u, m). Input/output canonical. The
-    // terminal distinct is OPTIONAL: both star maps are insensitive to
-    // input duplicates (groupBy-mins ignore multiplicity, outputs are
-    // set-equal), so the mid-pair dedup exchange can be skipped — only the
-    // edge set each round materializes must be distinct (the XOR
-    // signature needs a set, and duplicate growth must be swept).
-    def smallStar(e: DataFrame, dedup: Boolean): DataFrame = {
+    // terminal distinct is what each round's materialized edge set needs
+    // (the XOR signature needs a set, and duplicate growth must be swept);
+    // both star maps are insensitive to input duplicates (groupBy-mins
+    // ignore multiplicity, outputs are set-equal), so no other dedup runs.
+    def smallStar(e: DataFrame): DataFrame = {
       val mins = e.groupBy("src").agg(min(col("dst")).as("mn"))
-      val out = e.join(mins, "src")
+      e.join(mins, "src")
         .select(col("dst").as("src"), col("mn").as("dst"))
         .unionByName(mins.select(col("src"), col("mn").as("dst")))
         .filter(col("src") =!= col("dst"))
-      if (dedup) out.distinct() else out
+        .distinct()
     }
 
     // ONE round per materialization. Round-pair fusion (two star rounds
@@ -551,7 +550,7 @@ object Dedup {
     var i = 0
     var converged = false
     while (!converged && i <= maxIter) {
-      val next = smallStar(largeStar(cur), dedup = true).localCheckpoint(eager = false)
+      val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
       val row = next.agg(count(lit(1)), bit_xor(xxhash64(col("src"), col("dst")))).head()
       val sig = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
       converged = prev.contains(sig)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Quant.f6
 
 /** Distributed closed-form regression / correlation over grouped data
   * (north-star extension; SURVEY.md §2.10) — the profiling step behind
@@ -57,19 +58,15 @@ object Stats {
     val covN = (d38(col("n")) * d38(col("sxy")) - d38(col("sx")) * d38(col("sy"))).cast("double")
     val varXN = (d38(col("n")) * d38(col("sxx")) - d38(col("sx")) * d38(col("sx"))).cast("double")
     val varYN = (d38(col("n")) * d38(col("syy")) - d38(col("sy")) * d38(col("sy"))).cast("double")
-    // round-half-up via floor(x·1e6+0.5)/1e6, NOT round(): the values are
-    // outputs of double division chains, where round() may disagree across
-    // engines on exact .xxxxxx5 halves (NOTES.md round-4 parity lesson);
-    // the floor idiom is the same IEEE op sequence everywhere
-    def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
+    // rounded with Quant.f6's floor idiom, NOT round() (see Quant)
     val slope = covN / nullif(varXN, lit(0.0))
     stats.select(
       groupCols.map(col) ++ Seq(
         col("n"),
-        r6(slope).as("slope"),
-        r6((col("sy").cast("double") - slope * col("sx").cast("double"))
+        f6(slope).as("slope"),
+        f6((col("sy").cast("double") - slope * col("sx").cast("double"))
           / col("n").cast("double")).as("intercept"),
-        r6(covN / nullif(sqrt(varXN) * sqrt(varYN), lit(0.0))).as("r")): _*)
+        f6(covN / nullif(sqrt(varXN) * sqrt(varYN), lit(0.0))).as("r")): _*)
   }
 
   /** Logistic regression P(y=1 | x) by distributed IRLS over the (x, y)
@@ -180,7 +177,6 @@ object Stats {
     * coefficient frame — callers scoring rows or computing likelihoods
     * must use the identical quantized tree. */
   def logisticP(x: Column): Column = {
-    def f6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     greatest(least(
       f6(lit(1.0) / (lit(1.0) + exp(-(col("b0") + col("b1") * x.cast("double"))))),
       lit(0.999999)), lit(0.000001))

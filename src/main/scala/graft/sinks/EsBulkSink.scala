@@ -1,7 +1,9 @@
 package graft.sinks
 
+import graft.LocalFs
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Emulated Elasticsearch bulk sink (SURVEY.md §2.2 K2–K5).
   *
@@ -70,7 +72,7 @@ object EsBulkSink {
     val tmp = indexDir + ".staging"
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
     val dir = new java.io.File(indexDir)
-    if (exists) deleteRecursively(dir)
+    if (exists) LocalFs.deleteRecursively(dir)
     if (!new java.io.File(tmp).renameTo(dir))
       throw new java.io.IOException(s"failed to commit $tmp -> $indexDir")
   }
@@ -88,7 +90,8 @@ object EsBulkSink {
     * executor→driver channel that doesn't funnel data). A batch that still
     * fails after retries is COUNTED and skipped, not rethrown — matching
     * the reference's continue-on-partial-failure behavior; callers restore
-    * exactly-once via the idempotent upsert path.
+    * exactly-once via the idempotent upsert path. Only non-fatal errors
+    * are counted: an interrupt (task kill) or a VM error propagates.
     */
   def bulkIndexWithAccounting(
       df: DataFrame,
@@ -112,7 +115,7 @@ object EsBulkSink {
           withRetry(maxRetries, backoffMs)(() => post(payload))
           delivered.add(payload.size)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             failed.add(payload.size)
             errors.add(e.getMessage)
         }
@@ -131,15 +134,11 @@ object EsBulkSink {
     if (df.columns.sameElements(Array("bulk_line"))) df
     else df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("bulk_line"))
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** K5: bounded retry with linear backoff (3 attempts, 20 s·attempt in the
     * reference — `data-s3-elastic-transfer.py:249-253`). Runs on the
     * executor inside `foreachPartition`; at-least-once, made effectively-
-    * once by pairing with [[upsertById]].
+    * once by pairing with [[upsertById]]. Only non-fatal errors are
+    * retried: an interrupt or a VM error propagates from the first attempt.
     */
   def withRetry[T](maxRetries: Int = 3, backoffMs: Int = 20_000, sleep: Long => Unit = Thread.sleep)(
       attempt: () => T): T = {
@@ -148,7 +147,7 @@ object EsBulkSink {
     while (i < maxRetries) {
       try return attempt()
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e
           i += 1
           if (i < maxRetries) sleep((i.toLong) * backoffMs)

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.LocalFs
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,12 +53,7 @@ object Retention {
       if (staged.exists() && !staged.renameTo(live))
         throw new java.io.IOException(s"failed to commit $staged -> $live")
     }
-    deleteRecursively(new java.io.File(staging))
+    LocalFs.deleteRecursively(new java.io.File(staging))
     (affected, doomed)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

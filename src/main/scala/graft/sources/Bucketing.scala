@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.LocalFs
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed, co-located joins (SURVEY.md north-star scale notes).
@@ -26,15 +27,10 @@ object Bucketing {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val residue = new java.io.File(warehouse, table)
-    if (residue.exists()) deleteRecursively(residue)
+    if (residue.exists()) LocalFs.deleteRecursively(residue)
     val w = df.write.mode(SaveMode.Overwrite).bucketBy(buckets, bucketCol)
     val sorted = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
     sorted.saveAsTable(table)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Join two same-bucketed tables on their bucket column — planned

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Quant.f6
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -149,8 +150,6 @@ object EventStream {
       .cast("double") + lit(0.5)) / lit(16777216.0)
     val cu = u - lit(0.5)
     val noise = -signum(cu) * log(lit(1.0) - lit(2.0) * abs(cu))
-    def f6(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      floor(x * lit(1e6) + lit(0.5)) / lit(1e6)
     agg.select(col("day"), col("event_type"), col("c"), f6(noise).as("noise"),
       f6(greatest(col("c") + noise, lit(0.0))).as("released"))
   }

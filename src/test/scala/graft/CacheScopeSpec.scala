@@ -60,4 +60,20 @@ class CacheScopeSpec extends AnyFunSuite {
       }.toList
     assert(offenders.isEmpty, s"unpaired .cache() sites: ${offenders.mkString("; ")}")
   }
+
+  test("timed drains after a failed action and returns the failure instead of throwing") {
+    spark.sharedState.cacheManager.clearCache()
+    CacheScope.drain()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val boom = new IllegalStateException("query failed mid-action")
+    val r = CacheScope.timed(spark) {
+      CacheScope.cached(spark.range(100).toDF("id")).count()
+      throw boom
+    }
+    assert(r === Left(boom))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(before),
+      "a failed query's internal caches must be released")
+    val ok = CacheScope.timed(spark)(spark.range(10).count())
+    assert(ok.exists(_ >= 0.0))
+  }
 }

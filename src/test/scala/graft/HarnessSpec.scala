@@ -42,4 +42,45 @@ class HarnessSpec extends AnyFunSuite {
       assert(d.startsWith("/dev/shm/"), s"local scratch default must be tmpfs, got $d")
     }
   }
+
+  test("GraftSession.local pins the settings every main and the test suite run under") {
+    // TestSpark's session IS a GraftSession.local session; a local[N]
+    // master's default parallelism is its thread count N
+    val spark = TestSpark.spark
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === spark.sparkContext.defaultParallelism.toString)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "5000")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.ui.enabled") === "false")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.experimental.extraOptimizations.contains(graft.plans.TsRangePushdown))
+  }
+
+  test("sweepStale judges a scratch dir by its newest entry anywhere in the tree") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_sweep").toFile
+    val old = System.currentTimeMillis() - 7L * 60 * 60 * 1000 // past the 6 h threshold
+    def mk(path: String, mtime: Long): java.io.File = {
+      val f = new java.io.File(root, path)
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, Array[Byte](1))
+      assert(f.setLastModified(mtime))
+      f
+    }
+    // live run: its top-level dir is old, but a shuffle file under
+    // blockmgr-*/NN was just written
+    mk("spark-live/blockmgr-1/0c/shuffle_0_0_0.data", System.currentTimeMillis())
+    // crashed run: every entry is old
+    mk("spark-dead/blockmgr-2/1a/shuffle_1_0_0.data", old)
+    // directory mtimes last: creating children bumps their parents
+    Seq("spark-live/blockmgr-1/0c", "spark-live/blockmgr-1", "spark-live",
+        "spark-dead/blockmgr-2/1a", "spark-dead/blockmgr-2", "spark-dead")
+      .foreach(d => assert(new java.io.File(root, d).setLastModified(old)))
+    try {
+      GraftSession.sweepStale(root)
+      assert(new java.io.File(root, "spark-live/blockmgr-1/0c/shuffle_0_0_0.data").isFile,
+        "a dir with a fresh nested file must survive the sweep")
+      assert(!new java.io.File(root, "spark-dead").exists(), "a wholly old tree must be removed")
+    } finally LocalFs.deleteRecursively(root)
+  }
 }

@@ -79,6 +79,18 @@ class UpsertSpec extends AnyFunSuite {
     }
   }
 
+  test("withRetry never retries an interrupt: one attempt, the exception propagates") {
+    var calls = 0
+    val sleeps = scala.collection.mutable.ArrayBuffer[Long]()
+    intercept[InterruptedException] {
+      EsBulkSink.withRetry(maxRetries = 3, backoffMs = 10, sleep = sleeps.append(_)) { () =>
+        calls += 1
+        throw new InterruptedException("task killed")
+      }
+    }
+    assert(calls === 1 && sleeps.isEmpty)
+  }
+
   test("scd2Merge: change closes + reopens, no-op and insert paths, idempotent") {
     import spark.implicits._
     // history: id 1 open with v=a (plus an old closed row), id 2 open with v=x

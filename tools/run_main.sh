@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes, bypassing the sbt lock
-# (lets Explain/Scratch run while sbt test holds the project).
-# Usage: tools/run_main.sh graft.Explain [args...]
+# (lets Explain/Scratch run while sbt test holds the project). Session
+# settings come from graft.GraftSession.local inside the main.
+# Usage: tools/run_main.sh graft.Scratch 0.1 x_pagerank x_dbscan [--stages]
 MAIN="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
