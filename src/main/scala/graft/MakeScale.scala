@@ -61,15 +61,7 @@ object MakeScale {
 
     /** write as a single parquet FILE named <t>.parquet */
     def write(df: DataFrame, t: String): Unit = {
-      val tmp = s"$out/__stage_$t"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file for $t"))
-      val dst = new java.io.File(s"$out/$t.parquet")
-      dst.delete()
-      if (!part.renameTo(dst)) sys.error(s"rename failed for $t")
-      LocalFs.deleteRecursively(new java.io.File(tmp))
+      LocalFs.writeSingleParquet(df, s"$out/$t.parquet")
       println(s"$t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
     }
 

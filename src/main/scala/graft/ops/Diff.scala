@@ -148,16 +148,6 @@ object Diff {
   def missingRows(source: DataFrame, sinkState: DataFrame, idCol: String): DataFrame =
     source.join(sinkState.select(idCol).distinct(), Seq(idCol), "left_anti")
 
-  /** CDC changeset between two keyed snapshots: one FULL OUTER join on the
-    * key emitting `op` = 'I' (key only in `newSnap`), 'D' (only in
-    * `oldSnap`), or 'U' (in both with any `valueCols` differing —
-    * null-safe compare, the scd2Merge convention). Unchanged keys are
-    * dropped, so the output is exactly the change feed a downstream
-    * consumer replays — the generalization of the reference's "which ids
-    * are missing" reconcile (ID-based-transfer.py:241) to full
-    * insert/update/delete semantics. ONE key-shuffle; both value sets ride
-    * the join, no second lookup. Columns: key, op, then old_/new_ pairs.
-    */
   /** Apply an I/U/D changeset (the output shape of [[changeSet]]) back
     * onto a snapshot: ONE full-outer merge on the key — inserts arrive
     * from the change side, deletes drop the snapshot row, updates take
@@ -174,6 +164,16 @@ object Diff {
         when(col("op").isNotNull, col(s"new_$v")).otherwise(col(v)).as(v)): _*)
   }
 
+  /** CDC changeset between two keyed snapshots: one FULL OUTER join on the
+    * key emitting `op` = 'I' (key only in `newSnap`), 'D' (only in
+    * `oldSnap`), or 'U' (in both with any `valueCols` differing —
+    * null-safe compare, the scd2Merge convention). Unchanged keys are
+    * dropped, so the output is exactly the change feed a downstream
+    * consumer replays — the generalization of the reference's "which ids
+    * are missing" reconcile (ID-based-transfer.py:241) to full
+    * insert/update/delete semantics. ONE key-shuffle; both value sets ride
+    * the join, no second lookup. Columns: key, op, then old_/new_ pairs.
+    */
   def changeSet(oldSnap: DataFrame, newSnap: DataFrame, keyCol: String,
       valueCols: Seq[String]): DataFrame = {
     val o = oldSnap.select(col(keyCol) +: valueCols.map(c => col(c).as(s"old_$c")): _*)

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import graft.functions.Quant.f6
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming form of the reference's incremental semantics
@@ -52,14 +53,17 @@ object EventStream {
     * so per-executor state capacity scales with disk, commit cost with the
     * CHANGE rate rather than total state size, and GC pressure stays flat.
     *
-    * Opt-in, set on the session BEFORE the query first starts (the
-    * provider class is pinned in the checkpoint for the query's lifetime):
-    * `spark.conf.set(rocksDbStateStore._1, rocksDbStateStore._2)`. The
-    * bundled provider needs no extra dependency (rocksdbjni ships with
-    * Spark). Left OFF for this engine's bench entries: their test-scale
-    * state is a few thousand keys, where in-heap wins — the conf is the
-    * knob a 100 TB deployment flips. Exercised live by EventStreamSpec
-    * ("daily counts under the RocksDB state store...").
+    * Chosen from the plan: [[runAvailableNow]] starts a query under this
+    * provider (and [[rocksDbChangelog]]) exactly when its logical plan
+    * holds a `transformWithState` node, which REQUIRES it — t13, t15,
+    * t17–t21 and t28 run on RocksDB. Every other stateful query keeps the
+    * default provider: their test-scale state is a few thousand keys,
+    * where in-heap wins, and a 100 TB deployment sets this conf on the
+    * session before the query first starts (the provider class is pinned
+    * in the checkpoint for the query's lifetime). The bundled provider
+    * needs no extra dependency (rocksdbjni ships with Spark). Exercised
+    * live by EventStreamSpec ("daily counts under the RocksDB state
+    * store..." and "the RocksDB provider is chosen from the plan...").
     */
   val rocksDbStateStore: (String, String) =
     "spark.sql.streaming.stateStore.providerClass" ->
@@ -71,7 +75,7 @@ object EventStream {
     * than total state size — the published recommendation for RocksDB
     * state at scale, and measured slightly faster even at bench state
     * sizes (t20/t21 ~10%). Set alongside [[rocksDbStateStore]] whenever a
-    * query opts into RocksDB.
+    * query runs on RocksDB.
     */
   val rocksDbChangelog: (String, String) =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
@@ -254,6 +258,17 @@ object EventStream {
   /** Run a (bounded) streaming query to a named in-memory table and block
     * until the file source is drained — the test/smoke harness.
     * `outputMode` is "complete" for aggregations, "append" for row streams.
+    * `statePartitions`: see [[runAvailableNow]].
+    */
+  def runToMemory(df: DataFrame, name: String, checkpointDir: String,
+      outputMode: String = "complete", statePartitions: Option[Int] = None): StreamingQuery =
+    runAvailableNow(df, checkpointDir, statePartitions)(
+      _.outputMode(outputMode).format("memory").queryName(name))
+
+  /** The one start-and-drain path: start `df` with `sink`'s writer settings
+    * on `checkpointDir` under `Trigger.AvailableNow`, block until the
+    * source is drained, and return the finished query (its
+    * `recentProgress` holds one entry per micro-batch).
     *
     * `statePartitions`: number of shuffle (= state store) partitions the
     * query is STARTED with. A stateful query pins this count in its
@@ -261,60 +276,49 @@ object EventStream {
     * throughput, not inherited from the batch session default — per-
     * microbatch cost scales with it (every partition maintains and
     * commits its state store files each batch, even when near-empty).
+    *
+    * A query whose plan holds a `transformWithState` node starts under the
+    * RocksDB provider ([[rocksDbStateStore]] + [[rocksDbChangelog]]),
+    * which that operator requires; every other query keeps the session's
+    * provider.
     */
-  def runToMemory(df: DataFrame, name: String, checkpointDir: String,
-      outputMode: String = "complete", statePartitions: Option[Int] = None,
-      rocksDb: Boolean = false): StreamingQuery = {
-    val q = withStatePartitions(df.sparkSession, statePartitions) {
-      withRocksDb(df.sparkSession, rocksDb) {
-        df.writeStream
-          .outputMode(outputMode)
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+  def runAvailableNow(df: DataFrame, checkpointDir: String, statePartitions: Option[Int] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val needsRocksDb = df.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
+    val overrides =
+      statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq ++
+        (if (needsRocksDb) Seq(rocksDbStateStore, rocksDbChangelog) else Nil)
+    val q = withConf(df.sparkSession, overrides) {
+      sink(df.writeStream)
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
     q.awaitTermination()
     q
   }
 
-  /** Start a query under the RocksDB state store provider
-    * ([[rocksDbStateStore]]), restoring the session conf after start() has
-    * captured it — same serial-use contract as [[withStatePartitions]].
-    * transformWithState queries REQUIRE this provider.
-    */
-  private def withRocksDb[A](spark: SparkSession, enable: Boolean)(start: => A): A =
-    if (!enable) start
-    else {
-      val confs = Seq(rocksDbStateStore, rocksDbChangelog)
-      val prev = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
-      try { confs.foreach { case (key, value) => spark.conf.set(key, value) }; start }
-      finally prev.foreach {
-        case (key, Some(v)) => spark.conf.set(key, v)
-        case (key, None) => spark.conf.unset(key)
-      }
-    }
-
-  /** Start a streaming query under an overridden shuffle/state partition
-    * count, restoring the session conf once the query has CAPTURED it
-    * (StreamExecution clones the session in its constructor, during
-    * start(), so restoring after start() is race-free for the query).
+  /** Start a streaming query under overridden session confs, restoring
+    * each key to its previous value (or unsetting it if it had none) once
+    * the query has CAPTURED them (StreamExecution clones the session in its
+    * constructor, during start(), so restoring after start() is race-free
+    * for the query).
     *
-    * SERIAL-USE ASSUMPTION: the override is visible on the shared session
+    * SERIAL-USE ASSUMPTION: the overrides are visible on the shared session
     * for the duration of start(), so any concurrent batch query planned on
-    * the same session in that window would silently inherit it. Fine in
+    * the same session in that window would silently inherit them. Fine in
     * this engine's serial bench/verify harness; a concurrent caller must
     * instead build the stream's whole lineage on `spark.newSession()` and
     * set the conf there (the override can't be confined here because the
     * passed DataFrame is already bound to its session).
     */
-  private def withStatePartitions[A](spark: SparkSession, n: Option[Int])(start: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    try { n.foreach(v => spark.conf.set(key, v.toString)); start }
-    finally spark.conf.set(key, prev)
+  private def withConf[A](spark: SparkSession, confs: Seq[(String, String)])(start: => A): A = {
+    val prev = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
+    try { confs.foreach { case (key, value) => spark.conf.set(key, value) }; start }
+    finally prev.foreach {
+      case (key, Some(v)) => spark.conf.set(key, v)
+      case (key, None) => spark.conf.unset(key)
+    }
   }
 
   /** Batch (gaps-and-islands) form of sessionization: lag + cumulative sum
@@ -393,10 +397,10 @@ object EventStream {
     * via `transformWithState` + a typed `ValueState` — the successor API
     * to [flat]mapGroupsWithState (t7 keeps the legacy API exercised; this
     * entry exercises the new one). State per user is ONE long, updated
-    * per microbatch and emitted once per (user, batch) — at production
-    * state sizes the processor runs on the RocksDB provider
-    * ([[rocksDbStateStore]]), which transformWithState REQUIRES; the
-    * caller sets it before the query first starts.
+    * per microbatch and emitted once per (user, batch) — the processor
+    * runs on the RocksDB provider ([[rocksDbStateStore]]), which
+    * transformWithState REQUIRES; [[runAvailableNow]] reads that from the
+    * plan.
     */
   class RunningCountProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, (Long, Long), UserRunning] {
@@ -970,21 +974,12 @@ object EventStream {
     */
   def runForeachBatchUpsert(df: DataFrame, indexDir: String, checkpointDir: String,
       idCol: String, statePartitions: Option[Int] = None,
-      outputMode: String = "append"): StreamingQuery = {
-    val q = withStatePartitions(df.sparkSession, statePartitions) {
-      df.writeStream
-        .outputMode(outputMode)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.sinks.EsBulkSink.upsertById(
-            batch.withColumn("__v", lit(batchId)), indexDir, idCol, "__v")
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    q
-  }
+      outputMode: String = "append"): StreamingQuery =
+    runAvailableNow(df, checkpointDir, statePartitions)(_.outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.sinks.EsBulkSink.upsertById(
+          batch.withColumn("__v", lit(batchId)), indexDir, idCol, "__v")
+      })
 
   /** Failure-injection form of [[runForeachBatchUpsert]] — the T3
     * exactly-once-under-retry proof. The first run applies microbatch 0's
@@ -1010,26 +1005,18 @@ object EventStream {
       checkpointDir: String, idCol: String,
       statePartitions: Option[Int] = None): Unit = {
     val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def attempt(): Unit = {
-      val q = withStatePartitions(df.sparkSession, statePartitions) {
-        df.writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val versioned = batch.withColumn("__v", lit(batchId))
-            graft.sinks.EsBulkSink.upsertById(versioned, indexDir, idCol, "__v")
-            graft.sinks.EsBulkSink.indexAppend(batch, appendDir)
-            // crash AFTER the side-effects, BEFORE the commit log write —
-            // once, on the first delivery of batch 0
-            if (batchId == 0 && injected.compareAndSet(false, true))
-              throw new RuntimeException(
-                "injected failure: sink applied, checkpoint commit pending")
-          }
-          .option("checkpointLocation", checkpointDir)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-    }
+    def attempt(): Unit =
+      runAvailableNow(df, checkpointDir, statePartitions)(_.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val versioned = batch.withColumn("__v", lit(batchId))
+          graft.sinks.EsBulkSink.upsertById(versioned, indexDir, idCol, "__v")
+          graft.sinks.EsBulkSink.indexAppend(batch, appendDir)
+          // crash AFTER the side-effects, BEFORE the commit log write —
+          // once, on the first delivery of batch 0
+          if (batchId == 0 && injected.compareAndSet(false, true))
+            throw new RuntimeException(
+              "injected failure: sink applied, checkpoint commit pending")
+        }): Unit
     try attempt()
     catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
     attempt() // restart: batch 0 replays (uncommitted), then the rest drains
@@ -1158,15 +1145,7 @@ object EventStream {
   /** T3/T5 as a stream: incremental append of new files into the emulated
     * index directory with exactly-once file-source progress via checkpoint.
     */
-  def syncToIndex(events: DataFrame, indexDir: String, checkpointDir: String): StreamingQuery = {
-    val q = events.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", indexDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+  def syncToIndex(events: DataFrame, indexDir: String, checkpointDir: String): StreamingQuery =
+    runAvailableNow(events, checkpointDir)(
+      _.outputMode("append").format("parquet").option("path", indexDir))
 }

@@ -83,4 +83,30 @@ class HarnessSpec extends AnyFunSuite {
       assert(!new java.io.File(root, "spark-dead").exists(), "a wholly old tree must be removed")
     } finally LocalFs.deleteRecursively(root)
   }
+
+  test("staged copies its files in and always deletes the stage, also when the body throws") {
+    import java.nio.file.Files
+    val src = Files.createTempDirectory("graft_staged_src")
+    Files.write(src.resolve("t.parquet"), Array[Byte](1, 2, 3))
+    val dir = src.toString
+    try {
+      val stage = SparkEntry.staged("harness_staged", dir, "t.parquet" -> "t_a.parquet") { stage =>
+        val copied = Files.readAllBytes(java.nio.file.Paths.get(stage, "t_a.parquet"))
+        assert(copied.toSeq === Seq[Byte](1, 2, 3))
+        stage
+      }
+      assert(!new java.io.File(stage).exists(), "the stage must be gone after body returns")
+
+      var seen = ""
+      val e = intercept[IllegalStateException] {
+        SparkEntry.staged("harness_staged", dir, "t.parquet" -> "t_a.parquet") { stage =>
+          seen = stage
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage === "body failed", "the body's exception must propagate")
+      assert(seen.nonEmpty && !new java.io.File(seen).exists(),
+        "the stage must be gone after body throws")
+    } finally LocalFs.deleteRecursively(src.toFile)
+  }
 }

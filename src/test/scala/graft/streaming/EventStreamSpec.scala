@@ -132,7 +132,7 @@ class EventStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_tws_ckpt").toString
     EventStream.runToMemory(
       EventStream.runningCounts(EventStream.readEvents(spark, eventsDir)),
-      "tws_out", ckpt, outputMode = "update", statePartitions = Some(4), rocksDb = true)
+      "tws_out", ckpt, outputMode = "update", statePartitions = Some(4))
 
     val streamed = spark.table("tws_out")
       .groupBy("user_id").agg(max(col("seen")).as("n"))
@@ -144,6 +144,33 @@ class EventStreamSpec extends AnyFunSuite {
     // the provider override must not leak into the shared session
     assert(spark.conf.getOption(EventStream.rocksDbStateStore._1)
       .forall(_ != EventStream.rocksDbStateStore._2))
+  }
+
+  test("the RocksDB provider is chosen from the plan: transformWithState on it, a windowed agg off it") {
+    val key = EventStream.rocksDbStateStore._1
+    // batch 0's offset-log metadata records the confs the query started with
+    def started(ckpt: String, conf: String): String = {
+      val meta = scala.io.Source.fromFile(s"$ckpt/offsets/0")
+      try s""""${java.util.regex.Pattern.quote(conf)}":"([^"]+)"""".r
+        .findFirstMatchIn(meta.mkString).map(_.group(1)).getOrElse(fail(s"$conf not recorded"))
+      finally meta.close()
+    }
+    val before = spark.conf.getOption(key)
+
+    val twsCkpt = Files.createTempDirectory("graft_plan_tws").toString
+    EventStream.runToMemory(
+      EventStream.runningCounts(EventStream.readEvents(spark, eventsDir)),
+      "plan_tws", twsCkpt, outputMode = "update", statePartitions = Some(3))
+    assert(started(twsCkpt, key) === EventStream.rocksDbStateStore._2)
+    assert(started(twsCkpt, "spark.sql.shuffle.partitions") === "3")
+    assert(spark.conf.getOption(key) === before, "the provider override must be restored")
+
+    val aggCkpt = Files.createTempDirectory("graft_plan_agg").toString
+    EventStream.runToMemory(
+      EventStream.dailyCounts(EventStream.readEvents(spark, eventsDir)),
+      "plan_agg", aggCkpt, statePartitions = Some(3))
+    assert(started(aggCkpt, key).endsWith(".HDFSBackedStateStoreProvider"))
+    assert(spark.conf.getOption(key) === before)
   }
 
   test("event-time-timer sessionization: cross-batch merge, multi-island close, open tail held") {
@@ -192,7 +219,7 @@ class EventStreamSpec extends AnyFunSuite {
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     EventStream.runToMemory(
       EventStream.sessionizeTimers(stream, gapMs = 3600000L, delay = "30 minutes"),
-      "tws_sess", ckpt, outputMode = "append", statePartitions = Some(2), rocksDb = true)
+      "tws_sess", ckpt, outputMode = "append", statePartitions = Some(2))
     val got = spark.table("tws_sess")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val expected = Set(
@@ -207,7 +234,7 @@ class EventStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_topk_ckpt").toString
     EventStream.runToMemory(
       EventStream.topKTypesPerDay(EventStream.readEvents(spark, eventsDir), k = 3),
-      "topk_out", ckpt, outputMode = "update", statePartitions = Some(4), rocksDb = true)
+      "topk_out", ckpt, outputMode = "update", statePartitions = Some(4))
     // counts are monotone: max(cnt) per (day, type) + re-rank = final top-k
     val fin = spark.table("topk_out").groupBy("day", "event_type")
       .agg(max(col("cnt")).as("cnt"))
@@ -230,7 +257,7 @@ class EventStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_drift_ckpt").toString
     EventStream.runToMemory(
       EventStream.driftMonitor(EventStream.readEvents(spark, eventsDir)),
-      "drift_out", ckpt, outputMode = "append", statePartitions = Some(4), rocksDb = true)
+      "drift_out", ckpt, outputMode = "append", statePartitions = Some(4))
     val streamed = spark.table("drift_out")
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3))).toSet
     // batch mirror (the x_dist_drift plan), restricted to days the
@@ -308,7 +335,7 @@ class EventStreamSpec extends AnyFunSuite {
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     EventStream.runToMemory(
       EventStream.attributionMonitor(stream, delay = "1 hour"),
-      "tws_attr", ckpt, outputMode = "append", statePartitions = Some(2), rocksDb = true)
+      "tws_attr", ckpt, outputMode = "append", statePartitions = Some(2))
     val got = spark.table("tws_attr")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq.sorted
     val expected = Seq(
@@ -323,7 +350,7 @@ class EventStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_funnel_ckpt").toString
     EventStream.runToMemory(
       EventStream.funnelMonitor(EventStream.readEvents(spark, eventsDir)),
-      "funnel_out", ckpt, outputMode = "append", statePartitions = Some(4), rocksDb = true)
+      "funnel_out", ckpt, outputMode = "append", statePartitions = Some(4))
     val streamed = spark.table("funnel_out")
       .select("day", "n_view_users", "n_clicked", "n_converted", "conversion")
       .collect()
