@@ -14,12 +14,25 @@ import org.apache.spark.sql.functions._
   */
 object Diff {
 
-  /** J1/T1: partitions present in source but absent from the sink. */
+  /** J1/T1: partitions present in source but absent from the sink, as
+    * ONE aggregation (one exchange) over a tagged union of both sides'
+    * partition values, the sink's cast to the source's type. A null
+    * partition is one group, compared like any other value.
+    */
   def partitionDiff(source: DataFrame, sinkState: DataFrame, partCol: String): DataFrame =
-    source
+    taggedParts(source, sinkState, partCol)
+      .groupBy(partCol)
+      .agg(min("__src").as("__only_src"))
+      .filter(col("__only_src") === 1)
       .select(partCol)
-      .distinct()
-      .join(sinkState.select(partCol).distinct(), Seq(partCol), "left_anti")
+
+  /** `partCol` of both sides in one frame, each row tagged `__src` = 1
+    * from the source and 0 from the sink.
+    */
+  private def taggedParts(source: DataFrame, sinkState: DataFrame, partCol: String): DataFrame =
+    source.select(col(partCol), lit(1).as("__src"))
+      .unionByName(sinkState.select(col(partCol).cast(source.schema(partCol).dataType).as(partCol),
+        lit(0).as("__src")))
 
   /** J2/T2: row ids present in source but absent from the sink.
     * At extreme scale, pre-filter with a bloom filter on the sink ids
@@ -81,22 +94,18 @@ object Diff {
     definitelyMissing.unionByName(suspects)
   }
 
-  /** J3: per-partition count reconciliation — full-outer join of grouped
-    * counts, nulls coalesced to 0, mismatches kept. This is the reference's
-    * correctness check (`ID-based-transfer.py:90-109`) as one plan.
+  /** J3: per-partition count reconciliation — ONE aggregation over both
+    * sides' tagged partition values (absent side counts 0), mismatches
+    * kept. This is the reference's correctness check
+    * (`ID-based-transfer.py:90-109`) as one plan. A null partition is one
+    * group, as in [[partitionDiff]].
     * Output columns: partCol, src_cnt, sink_cnt.
     */
-  def countReconcile(source: DataFrame, sinkState: DataFrame, partCol: String): DataFrame = {
-    val s = source.groupBy(partCol).agg(count(lit(1)).as("src_cnt"))
-    val k = sinkState.groupBy(partCol).agg(count(lit(1)).as("sink_cnt"))
-    s.join(k, Seq(partCol), "full_outer")
-      .select(
-        col(partCol),
-        coalesce(col("src_cnt"), lit(0L)).as("src_cnt"),
-        coalesce(col("sink_cnt"), lit(0L)).as("sink_cnt")
-      )
+  def countReconcile(source: DataFrame, sinkState: DataFrame, partCol: String): DataFrame =
+    taggedParts(source, sinkState, partCol)
+      .groupBy(partCol)
+      .agg(count_if(col("__src") === 1).as("src_cnt"), count_if(col("__src") === 0).as("sink_cnt"))
       .filter(col("src_cnt") =!= col("sink_cnt"))
-  }
 
   /** J3 at CONTENT level: per-partition checksum reconciliation — catches
     * partitions whose row COUNTS agree but whose values drifted (partial
@@ -143,10 +152,12 @@ object Diff {
     source.join(keys.select(keyCol), Seq(keyCol), "left_semi")
 
   /** J2+J4 fused: rows whose id is missing from the sink, in one anti-join
-    * (skips materializing the id set — one shuffle instead of two).
+    * (skips materializing the id set — one shuffle instead of two). The
+    * sink's ids are not de-duplicated first: a repeated key on the build
+    * side cannot change an anti-join's result.
     */
   def missingRows(source: DataFrame, sinkState: DataFrame, idCol: String): DataFrame =
-    source.join(sinkState.select(idCol).distinct(), Seq(idCol), "left_anti")
+    source.join(sinkState.select(idCol), Seq(idCol), "left_anti")
 
   /** Apply an I/U/D changeset (the output shape of [[changeSet]]) back
     * onto a snapshot: ONE full-outer merge on the key — inserts arrive

@@ -40,17 +40,6 @@ object Upsert {
     opCol.fold(asOf)(op => asOf.filter(col(op) =!= "D"))
   }
 
-  /** Exact-duplicate drop by a subset of columns, deterministic keeper:
-    * lowest `idCol` wins (unlike `dropDuplicates`, whose survivor is
-    * partition-order dependent).
-    */
-  def dedupKeepMin(df: DataFrame, keyCols: Seq[String], idCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(idCol).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
   /** Type-2 slowly-changing-dimension merge: versioned history where each
     * id's current attributes live in an OPEN row (`toCol` null) and every
     * superseded state is a CLOSED interval [`fromCol`, `toCol`).

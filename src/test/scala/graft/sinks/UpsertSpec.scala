@@ -16,13 +16,6 @@ class UpsertSpec extends AnyFunSuite {
     assert(out === Array(("a", 2), ("b", 5)))
   }
 
-  test("dedupKeepMin keeps the lowest id per key (deterministic survivor)") {
-    val df = Seq((3L, "x"), (1L, "x"), (2L, "y")).toDF("id", "k")
-    val out = Upsert.dedupKeepMin(df, Seq("k"), "id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._2)
-    assert(out === Array((1L, "x"), (2L, "y")))
-  }
-
   test("upsertById is idempotent: writing the same batch twice yields the same state") {
     val dir = Files.createTempDirectory("graft_upsert").toString + "/idx"
     val batch = Seq(("a", 1.0, 1L), ("b", 2.0, 1L)).toDF("id", "v", "version")

@@ -1,7 +1,7 @@
 package graft.sync
 
 import graft.TestSpark
-import graft.sinks.Upsert
+import graft.sinks.{EsBulkSink, Upsert}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,6 +71,49 @@ class IncrementalSyncSpec extends AnyFunSuite {
     assert(mv === Map("Jan" -> 2L, "Feb" -> 2L, "Mar" -> 2L))
     // second refresh: nothing missing, nothing written
     assert(IncrementalSync.incrementalAggRefresh(source, aggDir, "month", agg) === Seq.empty)
+  }
+
+  test("verifyInSync keeps each duplicated id once, in its smallest partition, at any shuffle width") {
+    // within one partition the copy is simply dropped
+    val dupInPart = source.unionByName(Seq(("2", "Jan", 11.0)).toDF("id", "month", "temperature"))
+    assert(IncrementalSync.verifyInSync(source, dupInPart, "month", "id") === ((0L, 0L)))
+    // across two partitions id 1 counts in "Feb" (< "Jan"): Feb holds one
+    // id too many and Jan one too few, on every run
+    val dupAcross = source.unionByName(Seq(("1", "Feb", 10.0)).toDF("id", "month", "temperature"))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      val answers = Seq("1", "8").map { n =>
+        spark.conf.set(key, n)
+        IncrementalSync.verifyInSync(source, dupAcross, "month", "id")
+      }
+      assert(answers === Seq((2L, 0L), (2L, 0L)))
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("a sync whose append lost a file recovers on the next partition sync and reconcile") {
+    val idx = Files.createTempDirectory("graft_recover").toString + "/idx"
+    val versioned = source.withColumn("__v", lit(0L))
+    EsBulkSink.upsertById(versioned.filter($"month" === "Jan"), idx, "id", "__v")
+    def parts: Set[java.io.File] = new java.io.File(idx).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).toSet
+    val seeded = parts
+    // uncoalesced, the append spreads its rows over several files
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val r1 = try IncrementalSync.runPartitionSync(source, idx, "month", "id") finally spark.conf.set(key, prev)
+    assert(r1.partitionsMoved === Seq("Feb", "Mar") && r1.rowsMoved === 4L)
+    // a crash mid-commit: the fullest file the append wrote never landed
+    val lost = (parts -- seeded).maxBy(f => spark.read.parquet(f.toString).count())
+    assert(spark.read.parquet(lost.toString).count() > 0L)
+    lost.delete()
+    IncrementalSync.runPartitionSync(source, idx, "month", "id")
+    IncrementalSync.reconcileByIds(source, spark.read.parquet(idx), "month", "id", idx, "__v")
+    val sink = spark.read.parquet(idx)
+    assert(IncrementalSync.verifyInSync(source, sink, "month", "id") === ((0L, 0L)))
+    val held = sink.agg(count(lit(1)), countDistinct($"id")).head()
+    assert((held.getLong(0), held.getLong(1)) === ((6L, 6L)))
   }
 
   test("verifyInSync tolerates sink duplicates via dedup (auto-id append path)") {
