@@ -9,7 +9,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * the seconds go" is answered with numbers instead of guesses, the last
   * timed run's jobs, stages, tasks and task/CPU/GC seconds as tallied by a
   * SparkListener (optimization guide §1). `--stages` also prints that
-  * run's per-stage wall and task time. Usage:
+  * run's per-stage wall and task time. `SPARK_GRAFT_CPUS` sets the thread
+  * count (default 32). Usage:
   *   sbt "runMain graft.Scratch 0.1 x_token_fertility x_minhash_lsh [--stages]"
   */
 object Scratch {
@@ -61,7 +62,7 @@ object Scratch {
     val names = if (rest.length > 1) rest.drop(1).toSeq else Bench.headline
     // an absolute path selects a synthesized corpus (e.g. MakeScale's sf1)
     val sfDir = if (sf.startsWith("/")) sf else s"/root/testdata/sf$sf"
-    val spark = GraftSession.local(32, "Scratch")
+    val spark = GraftSession.local(GraftSession.envThreads(32), "Scratch")
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)
     // listener events arrive asynchronously: let the previous run's settle

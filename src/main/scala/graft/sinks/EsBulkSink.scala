@@ -33,6 +33,11 @@ import scala.util.control.NonFatal
   * of new ids — the sync's case: missing partitions and missing ids —
   * writes just the delta (422 rows into a 100k-row index per perfbench
   * `sync_delta` cycle, against 199,907 through [[upsertById]]).
+  *
+  * Both read the index with `LocalFs.readFlatParquet`: its schema comes
+  * from one file footer read on the driver, not from Spark's one-task
+  * schema-inference job, so a streaming micro-batch's upsert runs its one
+  * write and no other job.
   */
 object EsBulkSink {
 
@@ -79,7 +84,7 @@ object EsBulkSink {
     val spark = df.sparkSession
     val exists = new java.io.File(indexDir).exists()
     val merged =
-      if (exists) Upsert.lastWriteWins(spark.read.parquet(indexDir).unionByName(df), idCol, versionCol)
+      if (exists) Upsert.lastWriteWins(LocalFs.readFlatParquet(spark, indexDir).unionByName(df), idCol, versionCol)
       else Upsert.lastWriteWins(df, idCol, versionCol)
     // Stage then swap: parquet can't overwrite its own input in place.
     val tmp = indexDir + ".staging"
@@ -109,7 +114,7 @@ object EsBulkSink {
   def appendNewById(df: DataFrame, indexDir: String, idCol: String, versionCol: String): Unit = {
     val dir = new java.io.File(indexDir)
     def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
-    val live = if (dir.exists()) Some(df.sparkSession.read.parquet(indexDir)) else None
+    val live = if (dir.exists()) Some(LocalFs.readFlatParquet(df.sparkSession, indexDir)) else None
     live.filter(l => columns(l.schema) == columns(df.schema)) match {
       case None => upsertById(df, indexDir, idCol, versionCol)
       case Some(index) =>

@@ -82,8 +82,8 @@ object EventStream {
 
   /** File-source stream over a directory of events parquet, `ts`
     * normalized to TimestampType. Streams can't infer schemas, so the
-    * stored `ts` type is probed from the directory's parquet footers via
-    * a one-off batch read (footer-only, no data scan) and the declared
+    * stored `ts` type is probed from the first file's parquet footer on
+    * the driver (`LocalFs.readFlatParquet`: no Spark job) and the declared
     * stream schema + normalization branch follow it — the same
     * schema-driven normalization as `Tables.normalizeTs`, kept encoding-
     * agnostic so corpus re-encodes can't skew event time.
@@ -101,7 +101,7 @@ object EventStream {
   def readEvents(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val storedTs =
-      try spark.read.parquet(dir).schema("ts").dataType
+      try graft.LocalFs.readFlatParquet(spark, dir).schema("ts").dataType
       catch { case _: org.apache.spark.sql.AnalysisException =>
         eventsSchema("ts").dataType // empty dir: no footer to probe yet
       }

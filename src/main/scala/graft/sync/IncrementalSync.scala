@@ -1,5 +1,6 @@
 package graft.sync
 
+import graft.LocalFs
 import graft.ops.Diff
 import graft.sinks.EsBulkSink
 import org.apache.spark.sql.{DataFrame, Observation}
@@ -25,6 +26,9 @@ import org.apache.spark.sql.functions._
   * Both commit through [[EsBulkSink.appendNewById]], which appends only
   * the rows whose id the index lacks; each sync cycle adds at most 2 small
   * files to the index (see there). [[verifyInSync]] is one more action.
+  * The index is read with `LocalFs.readFlatParquet` (here and in the
+  * sink): its schema comes from a footer read on the driver, so reading
+  * it submits no schema-inference job.
   */
 object IncrementalSync {
 
@@ -100,7 +104,7 @@ object IncrementalSync {
   def runPartitionSync(source: DataFrame, indexDir: String, partCol: String, idCol: String): SyncReport = {
     val spark = source.sparkSession
     val sinkState =
-      if (new java.io.File(indexDir).exists()) spark.read.parquet(indexDir)
+      if (new java.io.File(indexDir).exists()) LocalFs.readFlatParquet(spark, indexDir)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema.add("__v", "long"))
     syncMissingPartitions(source, sinkState, partCol,

@@ -2,8 +2,10 @@
 # Run a graft main directly on the compiled classes, bypassing the sbt lock
 # (lets Explain/Scratch run while sbt test holds the project). Session
 # settings come from graft.GraftSession.local inside the main.
+# Classes come from the checkout this script lives in (compile it first).
 # Usage: tools/run_main.sh graft.Scratch 0.1 x_pagerank x_dbscan [--stages]
 MAIN="$1"; shift
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -15,5 +17,5 @@ done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
