@@ -98,30 +98,30 @@ object Stats {
     //
     // Every driver op below replicates the previous Column chain's IEEE /
     // decimal semantics exactly (StatsSpec + the DuckDB oracle pin it):
-    //  - f6(v)  = floor(v·1e6 + 0.5) / 1e6 on doubles;
+    //  - f6(v)  = Quant.f6's driver form (Spark's floor-to-LONG);
     //  - d6 sums = java BigDecimal.valueOf(f6val).setScale(6, HALF_UP)
     //    (Spark's double→decimal(28,6) cast), summed exactly, then one
     //    .doubleValue() (the aggregate's final double cast);
-    //  - null cells (null x or y) drop out of every sum, as they did
-    //    under Spark's null-skipping sum;
-    //  - an EMPTY histogram leaves the sums NULL (not 0), so the coef
-    //    pair stays null, as the aggregate form returned.
+    //  - a cell with a null x or y keeps the terms the null is not in:
+    //    least/greatest skip a null sigmoid, so a null x gets p = 0.999999,
+    //    and only the products holding the null drop out of their sums;
+    //  - a sum with no terms (an EMPTY histogram) is NULL, not 0, so the
+    //    coef pair is null, as the aggregate form returned.
     val rows = histPlan.collect()
     val hist = spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), histPlan.schema)
     val xi = hist.schema.fieldIndex("x")
     val yi = hist.schema.fieldIndex("y")
     val fi = hist.schema.fieldIndex("f")
-    val cells = rows.iterator.filterNot(r => r.isNullAt(xi) || r.isNullAt(yi)).map { r =>
-      def num(i: Int): Double = r.get(i) match {
-        case d: java.lang.Double => d
+    val cells = rows.map { r =>
+      def num(i: Int): Option[Double] = Option(r.get(i)).map {
+        case d: java.lang.Double => d.doubleValue
         case f: java.lang.Float => f.toDouble
         case n: java.lang.Number => n.doubleValue()
-        case d: java.math.BigDecimal => d.doubleValue()
         case other => other.toString.toDouble
       }
       (num(xi), num(yi), r.getLong(fi).toDouble)
-    }.toArray
+    }
     val (b0, b1) = irlsSolve(cells, iters)
     val coef = spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row(b0, b1)),
@@ -131,41 +131,46 @@ object Stats {
     (hist, coef)
   }
 
-  /** The driver-side Newton loop of [[logisticIrls]] over (x, y, f) cells —
-    * exposed so callers that already hold a (sliced) joint histogram can
-    * fit without another corpus pass. Returns (b0, b1), null on an empty
-    * cell set (the aggregate form's NULL-sum edge).
+  /** The driver-side Newton loop of [[logisticIrls]] over (x, y, f) cells
+    * (None = a null x or y) — exposed so callers that already hold a
+    * (sliced) joint histogram can fit without another corpus pass.
+    * Returns (b0, b1), null when a sum has no terms (the aggregate form's
+    * NULL-sum edge).
     */
   private[graft] def irlsSolve(
-      cells: Array[(Double, Double, Double)], iters: Int): (java.lang.Double, java.lang.Double) = {
-    def f6(v: Double): Double = math.floor(v * 1e6 + 0.5) / 1e6
-    // Spark parity on the degenerate edges: least/greatest order NaN as
-    // the LARGEST double (so a NaN sigmoid clamps to the upper bound,
-    // where math.min would keep NaN), and a non-finite double casts to
-    // decimal as NULL, which sum skips — replicated by skipping the term.
-    def least(a: Double, b: Double): Double = if (a.isNaN) b else math.min(a, b)
-    def greatest(a: Double, b: Double): Double = if (a.isNaN) a else math.max(a, b)
+      cells: Array[(Option[Double], Option[Double], Double)],
+      iters: Int): (java.lang.Double, java.lang.Double) = {
+    // Spark parity on the degenerate edges: f6 floors through LONG, so
+    // the sigmoid is never NaN and min/max clamp it as least/greatest do;
+    // a non-finite double casts to decimal as NULL, which sum skips —
+    // replicated by skipping the term, as a null term is skipped. A sum
+    // stays None until its first term.
     def d6(v: Double): java.math.BigDecimal =
       java.math.BigDecimal.valueOf(f6(v)).setScale(6, java.math.RoundingMode.HALF_UP)
-    def addD6(acc: java.math.BigDecimal, v: Double): java.math.BigDecimal =
-      if (v.isNaN || v.isInfinite) acc else acc.add(d6(v))
-    if (cells.isEmpty) return (null, null)
+    def addD6(acc: Option[java.math.BigDecimal], v: Option[Double]) = v match {
+      case Some(d) if !d.isNaN && !d.isInfinite => Some(acc.fold(d6(d))(_.add(d6(d))))
+      case _ => acc
+    }
     var b0 = 0.0
     var b1 = 0.0
     for (_ <- 1 to iters) {
-      var g0, g1, h00, h01, h11 = java.math.BigDecimal.ZERO
+      var g0, g1, h00, h01, h11 = Option.empty[java.math.BigDecimal]
       cells.foreach { case (xv, yv, fv) =>
-        val p = greatest(least(
-          f6(1.0 / (1.0 + math.exp(-(b0 + b1 * xv)))), 0.999999), 0.000001)
+        val p = xv.fold(0.999999)(x =>
+          math.max(math.min(f6(1.0 / (1.0 + math.exp(-(b0 + b1 * x)))), 0.999999), 0.000001))
         val w = p * (1.0 - p)
-        g0 = addD6(g0, fv * (yv - p))
-        g1 = addD6(g1, fv * (yv - p) * xv)
-        h00 = addD6(h00, fv * w)
-        h01 = addD6(h01, fv * w * xv)
-        h11 = addD6(h11, fv * w * xv * xv)
+        val res = yv.map(y => fv * (y - p))
+        g0 = addD6(g0, res)
+        g1 = addD6(g1, for (r <- res; x <- xv) yield r * x)
+        h00 = addD6(h00, Some(fv * w))
+        h01 = addD6(h01, xv.map(x => fv * w * x))
+        h11 = addD6(h11, xv.map(x => fv * w * x * x))
       }
-      val (g0d, g1d, h00d, h01d, h11d) =
-        (g0.doubleValue, g1.doubleValue, h00.doubleValue, h01.doubleValue, h11.doubleValue)
+      // a NULL sum nulls both coefficients, and a null coefficient stays
+      // null through every later step
+      val sums = Seq(g0, g1, h00, h01, h11)
+      if (sums.exists(_.isEmpty)) return (null, null)
+      val Seq(g0d, g1d, h00d, h01d, h11d) = sums.map(_.get.doubleValue)
       val det = h00d * h11d - h01d * h01d
       b0 = f6(b0 + (h11d * g0d - h01d * g1d) / det)
       b1 = f6(b1 + (h00d * g1d - h01d * g0d) / det)

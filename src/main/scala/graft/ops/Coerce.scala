@@ -42,9 +42,6 @@ object Coerce {
     df.select(cols: _*)
   }
 
-  /** F2 alone: null → default without a type change. */
-  def nullToDefault(c: Column, default: Any): Column = coalesce(c, lit(default))
-
   /** The reference pipeline's own table spec (union of
     * `data-s3-elastic-transfer.py:156-172` and `ID-based-transfer.py:263-271`,
     * defaults per `:129-148`). Used by the sync tests.

@@ -93,20 +93,6 @@ object Tables {
   def loadPartition(spark: SparkSession, basePath: String, partCol: String, value: String): DataFrame =
     loadPartitioned(spark, basePath).filter(col(partCol) === lit(value))
 
-  /** S2: catalog-style access — register every testdata table as a view so
-    * `spark.read.table(name)` / `spark.sql` resolve them, mirroring the
-    * Glue Data Catalog lookup (`data-s3-elastic-transfer.py:95-99`). In
-    * production this is a real metastore; the query surface is identical.
-    */
-  val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    tableNames.foreach { n =>
-      val df = if (n == "events") loadEvents(spark, sfDir) else load(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
-
   /** Fan a narrow scan out to the session's full parallelism before
     * CPU-heavy per-row work (shingle explosion, signature math, n-gram
     * generation). A small table arrives as one file → one input split →

@@ -90,7 +90,7 @@ class HarnessSpec extends AnyFunSuite {
     Files.write(src.resolve("t.parquet"), Array[Byte](1, 2, 3))
     val dir = src.toString
     try {
-      val stage = SparkEntry.staged("harness_staged", dir, "t.parquet" -> "t_a.parquet") { stage =>
+      val stage = queries.Helpers.staged("harness_staged", dir, "t.parquet" -> "t_a.parquet") { stage =>
         val copied = Files.readAllBytes(java.nio.file.Paths.get(stage, "t_a.parquet"))
         assert(copied.toSeq === Seq[Byte](1, 2, 3))
         stage
@@ -99,7 +99,7 @@ class HarnessSpec extends AnyFunSuite {
 
       var seen = ""
       val e = intercept[IllegalStateException] {
-        SparkEntry.staged("harness_staged", dir, "t.parquet" -> "t_a.parquet") { stage =>
+        queries.Helpers.staged("harness_staged", dir, "t.parquet" -> "t_a.parquet") { stage =>
           seen = stage
           throw new IllegalStateException("body failed")
         }

@@ -9,6 +9,15 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("the registry holds 489 queries under distinct names") {
+    // the three maps are built from the registry, and building a Map
+    // silently keeps only the last of two same-named queries
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size === 489)
+    assert(names.diff(names.distinct).isEmpty, s"duplicate names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.size === 489 && SparkEntry.oracleSql.size === 489)
+  }
+
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without queries: $missing")

@@ -48,7 +48,13 @@ class StatsSpec extends AnyFunSuite {
     // drift from the algebra the DuckDB oracle replays.
     val pts = (1 to 700).map(i => (i % 23, if ((i * 7) % 23 > 11 ^ i % 13 == 0) 1 else 0))
       .toDF("x", "y")
-    def columnSpecFit(iters: Int): (Double, Double) = {
+    // null cells keep their partial terms under the Column form: a null x
+    // gets p = 0.999999 (least/greatest skip nulls) and still feeds g0
+    // and h00; a null y still feeds the three Hessian sums
+    val withNulls = pts.union((1 to 60).map(i =>
+      (if (i % 3 == 0) None else Some(i % 23), if (i % 3 == 0) Some(i % 2) else None))
+      .toDF("x", "y"))
+    def columnSpecFit(pts: org.apache.spark.sql.DataFrame, iters: Int): (Double, Double) = {
       val hist = pts.groupBy("x", "y").agg(count(lit(1)).as("f"))
       def f6(c: org.apache.spark.sql.Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       def d6(c: org.apache.spark.sql.Column) = f6(c).cast("decimal(28,6)")
@@ -76,12 +82,14 @@ class StatsSpec extends AnyFunSuite {
       val r = coef.collect().head
       (r.getDouble(0), r.getDouble(1))
     }
-    for (iters <- Seq(1, 3, 5)) {
-      val (_, coef) = Stats.logisticIrls(pts, col("x"), col("y"), iters)
+    for (input <- Seq(pts, withNulls); iters <- Seq(1, 3, 5)) {
+      val (_, coef) = Stats.logisticIrls(input, col("x"), col("y"), iters)
       val r = coef.collect().head
-      assert((r.getDouble(0), r.getDouble(1)) === columnSpecFit(iters),
+      assert((r.getDouble(0), r.getDouble(1)) === columnSpecFit(input, iters),
         s"driver IRLS diverged from the Column spec at iters=$iters")
     }
+    assert(columnSpecFit(withNulls, 3) != columnSpecFit(pts, 3),
+      "the null cells must move the fit")
   }
 
   test("logisticIrls is partitioning-invariant: decimal sums make the fit bit-identical") {
