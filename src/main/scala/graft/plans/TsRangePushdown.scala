@@ -56,10 +56,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * excluded by the range form. This matches the engine's event-time
   * domain everywhere else (the nanos-long conversion itself assumes
   * positive epochs); pipelines that need to SURFACE out-of-era garbage
-  * should filter on the raw column, not on a formatted string — or set
-  * `spark.graft.tsRangePushdown.inequality=false` ([[InequalityConfKey]])
-  * to restore strict string-comparison semantics for the inequality forms
-  * while keeping the always-sound equality rewrite.
+  * should filter on the raw column, not on a formatted string.
   */
 object TsRangePushdown extends Rule[LogicalPlan] {
 
@@ -112,17 +109,6 @@ object TsRangePushdown extends Rule[LogicalPlan] {
 
   private def tsLit(micros: Long, dt: DataType): Literal = Literal(micros, dt)
 
-  /** Escape hatch for the inequality (non-equality) rewrites, whose
-    * soundness assumes the years-1000..9999 era (see Soundness domain):
-    * setting this false restores strict lexicographic-string semantics for
-    * `<`/`<=`/`>`/`>=` without deregistering the rule (equality stays
-    * rewritten — it is sound for every input).
-    */
-  val InequalityConfKey = "spark.graft.tsRangePushdown.inequality"
-
-  private def inequalityEnabled: Boolean =
-    conf.getConfString(InequalityConfKey, "true").toBoolean
-
   /** T cmp day-string → range over T. `flip` when the literal was on the
     * left (e.g. `'d' < date_format(ts)` ≡ `date_format(ts) > 'd'`).
     */
@@ -132,8 +118,7 @@ object TsRangePushdown extends Rule[LogicalPlan] {
       day: String,
       cmp: BinaryComparison,
       flip: Boolean): Option[Expression] =
-    if (!cmp.isInstanceOf[EqualTo] && !inequalityEnabled) None
-    else dayBounds(day, t.dataType, tzId).map { case (lo, hi) =>
+    dayBounds(day, t.dataType, tzId).map { case (lo, hi) =>
       val dt = t.dataType
       cmp match {
         case _: EqualTo => And(GreaterThanOrEqual(t, tsLit(lo, dt)), LessThan(t, tsLit(hi, dt)))

@@ -56,20 +56,6 @@ class TsRangePushdownSpec extends AnyFunSuite {
     }
   }
 
-  test("inequality rewrites can be disabled by conf; equality stays rewritten") {
-    withRule {
-      spark.conf.set(TsRangePushdown.InequalityConfKey, "false")
-      try {
-        val ineq = Tables.withDay(Tables.loadEvents(spark, TestSpark.sfDir))
-          .filter(col("day") < "2024-01-10").queryExecution.optimizedPlan.toString
-        assert(!ineq.contains("GreaterThanOrEqual(ts"), s"inequality must stay a string compare:\n$ineq")
-        val eq = dayFiltered("2024-01-05").queryExecution.executedPlan.toString
-        assert(eq.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"),
-          s"equality rewrite must survive the flag:\n$eq")
-      } finally spark.conf.unset(TsRangePushdown.InequalityConfKey)
-    }
-  }
-
   test("day bounds honor the date_format expression's resolved time zone") {
     // analyze under Asia/Tokyo (UTC+9), optimize under the session default
     // (UTC): the rewritten range must match Tokyo's day boundaries, i.e.

@@ -4,13 +4,16 @@
 Usage: python3 tools/verify_diff.py A B
 
 Checks that
-  - oracle_sql.json and gated_by.json are byte-identical, and
+  - oracle_sql.json and gated_by.json are byte-identical (a difference is
+    reported per query key: added, removed or changed text, or else the
+    key order), and
   - both sides hold the same result directories, each with the same row
     count and the same order-independent content hash (DuckDB
     sum(hash(row)) over the result's parquet files).
 
 Prints every difference and exits 1 if there is any, 0 otherwise.
 """
+import json
 import os
 import sys
 
@@ -21,6 +24,14 @@ JSON_FILES = ("oracle_sql.json", "gated_by.json")
 
 def result_dirs(root):
     return {d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))}
+
+
+def json_diffs(name, pa, pb):
+    """Per-key differences between two JSON objects of query name -> text."""
+    ja, jb = json.load(open(pa)), json.load(open(pb))
+    diffs = [f"{name}: {k} only in {'A' if k in ja else 'B'}" for k in sorted(ja.keys() ^ jb.keys())]
+    diffs += [f"{name}: {k} text differs" for k in sorted(ja.keys() & jb.keys()) if ja[k] != jb[k]]
+    return diffs or [f"{name}: key order differs"]
 
 
 def digest(con, path):
@@ -36,7 +47,7 @@ def main(a, b):
         if not (os.path.isfile(pa) and os.path.isfile(pb)):
             diffs.append(f"{name}: missing on {'A' if not os.path.isfile(pa) else 'B'}")
         elif open(pa, "rb").read() != open(pb, "rb").read():
-            diffs.append(f"{name}: bytes differ")
+            diffs += json_diffs(name, pa, pb)
     da, db = result_dirs(a), result_dirs(b)
     for name in sorted(da ^ db):
         diffs.append(f"{name}: result only in {'A' if name in da else 'B'}")
