@@ -218,71 +218,6 @@ private[graft] object Helpers {
                   count(*) * 10 AS n_true, TRUE AS recall_ok
            FROM embeddings WHERE vec_id < 100 GROUP BY 1 ORDER BY 1"""
 
-  // x_crawl_funnel / t27_stream_crawl_funnel, the batch and stream twins:
-  // EVERY funnel layer's output re-derived from id arithmetic — status
-  // (HTTP), charset class (byte plants), title / link count / visible text
-  // incl. the é payload (HTML through the detected decode), canonical URL
-  // (RFC 3986) and the RFC 9309 precedence verdict. One wrong byte
-  // anywhere shifts a column; the stream must reproduce the batch rows.
-  val crawlFunnelSql =
-    """WITH d AS (SELECT doc_id,
-                        CAST(doc_id % 4 + 1 AS INTEGER) AS k,
-                        CAST(doc_id % 5 + 1 AS INTEGER) AS nl
-                      FROM documents),
-                t AS (SELECT doc_id, k, nl,
-                        'Doc ' || doc_id || ' t' || (doc_id % 7) AS title,
-                        'Heading ' || doc_id || ' '
-                          || array_to_string(list_transform(range(0, nl),
-                               i -> 'link ' || i), ' ')
-                          || ' Tail & fin'
-                          || CASE WHEN doc_id % 3 = 0 THEN ''
-                                  ELSE ' ' || repeat('é', k) END AS text
-                      FROM d)
-           SELECT doc_id,
-                  CAST(CASE WHEN doc_id % 3 = 0 THEN 200
-                            WHEN doc_id % 3 = 1 THEN 301 ELSE 404 END AS INTEGER) AS status,
-                  CASE WHEN doc_id % 3 = 0 THEN 'ascii'
-                       WHEN doc_id % 3 = 1 THEN 'utf-8' ELSE 'latin-1' END AS charset,
-                  title, nl AS n_links, text,
-                  'http://example-' || (doc_id % 50) || '.com'
-                    || '/a/' || (doc_id % 7) || '/page' AS url_canon,
-                  'example-' || (doc_id % 50) || '.com' AS host,
-                  (CASE WHEN (doc_id % 50) % 5 = 1 THEN doc_id % 7 = 1
-                        WHEN (doc_id % 50) % 5 = 2 THEN doc_id % 7 = 3
-                        WHEN (doc_id % 50) % 5 = 3 THEN doc_id % 7 <> 3
-                        WHEN (doc_id % 50) % 5 = 4 THEN doc_id % 7 = 5
-                        ELSE FALSE END) AS blocked
-           FROM t ORDER BY doc_id"""
-
-  // x_cdx_merge / t29_stream_cdx_merge, the batch and stream twins: both
-  // generations in closed form, last-gen-wins on (surt, ts) via arg_max —
-  // green only if the dedup resolution AND the per-partition CDXJ round
-  // trip keep every surviving pointer, batch or streamed
-  val cdxMergeSql =
-    """WITH g AS (
-             SELECT 0 AS gen, 'com,example)/doc/' || doc_id AS surt,
-                    'http://example.com/doc/' || doc_id AS url,
-                    '20260101' || lpad(CAST(doc_id % 86400 AS VARCHAR), 6, '0') AS ts,
-                    doc_id * 100 AS off, 50 + doc_id % 10 AS len
-             FROM documents
-             UNION ALL
-             SELECT 1, 'com,example)/doc/' || doc_id,
-                    'http://example.com/doc/' || doc_id,
-                    '20260102' || lpad(CAST(doc_id % 86400 AS VARCHAR), 6, '0'),
-                    doc_id * 100 + 7, 60 + doc_id % 10
-             FROM documents WHERE doc_id % 3 = 0
-             UNION ALL
-             SELECT 1, 'com,example)/doc/' || doc_id,
-                    'http://example.com/doc/' || doc_id,
-                    '20260101' || lpad(CAST(doc_id % 86400 AS VARCHAR), 6, '0'),
-                    doc_id * 100 + 13, 70 + doc_id % 10
-             FROM documents WHERE doc_id % 5 = 0)
-           SELECT surt, ts, arg_max(url, gen) AS url,
-                  CAST(arg_max(off, gen) AS BIGINT) AS "offset",
-                  CAST(arg_max(len, gen) AS BIGINT) AS length,
-                  CAST(max(gen) AS BIGINT) AS gen
-           FROM g GROUP BY surt, ts ORDER BY surt, ts"""
-
   // x_dp_counts / t22_stream_dp: the identical deterministic release
   val dpCountsSql =
     s"""WITH c AS (SELECT $dayE AS day, event_type, count(*) AS c FROM events GROUP BY 1, 2),
