@@ -1149,15 +1149,6 @@ object Multimodal {
       .withColumn("out_h", floor(col("height") * col("scale")).cast("int"))
   }
 
-  /** Deterministic frame sampling plan for video payloads: every
-    * `stride`-th frame index, as rows. Pure column math (no decode) — the
-    * decode of chosen frames happens in [[extractFeatures]].
-    */
-  def sampleFrames(media: DataFrame, idCol: String, nFramesCol: String, stride: Int): DataFrame =
-    media.select(
-      col(idCol),
-      explode(sequence(lit(0), greatest(col(nFramesCol) - 1, lit(0)), lit(stride))).as("frame_idx"))
-
   /** Deterministic MP4/ISO-BMFF writer with a REAL sample table — the
     * write half of [[decodeMp4Samples]]: ftyp + moov[mvhd + trak[tkhd +
     * mdia[mdhd + minf[stbl[stts + stsz + stss]]]]], all version-0 boxes

@@ -2,7 +2,7 @@ package graft
 package queries
 
 import graft.queries.Helpers._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,6 +45,44 @@ private[graft] object Crawl {
         (s"example-$h.com", al, dis)
       }
       .toDF("host", "allows", "disallows")
+  }
+
+  /** `urls` + `url_canon`, `host`, `path` of its raw URL column `raw` and
+    * the host's broadcast [[hostRobotsRules]] (`allows`, `disallows`). */
+  private def withRobotsRules(urls: DataFrame, raw: String): DataFrame =
+    urls
+      .withColumn("url_canon", graft.functions.UrlFunctions.canonicalizeUrl(col(raw)))
+      .withColumn("host",
+        substring_index(substring_index(col("url_canon"), "://", -1), "/", 1))
+      .withColumn("path",
+        substring_index(col("url_canon"), "://", -1)
+          .substr(length(col("host")) + 1,
+            length(substring_index(col("url_canon"), "://", -1))))
+      .join(broadcast(hostRobotsRules(urls.sparkSession)), Seq("host"), "left")
+
+  /** The oracle side of [[withRobotsRules]]' url_canon, host and RFC 9309
+    * verdict on the 50-host URLs `example-<doc_id % 50>.com/a/<doc_id % 7>/page`. */
+  private val robotsVerdictSql =
+    """'http://example-' || (doc_id % 50) || '.com'
+                    || '/a/' || (doc_id % 7) || '/page' AS url_canon,
+                  'example-' || (doc_id % 50) || '.com' AS host,
+                  (CASE WHEN (doc_id % 50) % 5 = 1 THEN doc_id % 7 = 1
+                        WHEN (doc_id % 50) % 5 = 2 THEN doc_id % 7 = 3
+                        WHEN (doc_id % 50) % 5 = 3 THEN doc_id % 7 <> 3
+                        WHEN (doc_id % 50) % 5 = 4 THEN doc_id % 7 = 5
+                        ELSE FALSE END) AS blocked"""
+
+  /** The HTTP block `http` stored as doc `id`'s gzip'd WARC response
+    * record and read back through both envelopes (WARC, then HTTP). */
+  private def httpRoundTrip(id: Long, http: Array[Byte],
+      codec: graft.sources.Warc.GzipCodec): graft.sources.Warc.HttpResponse = {
+    val file = codec.gzip(graft.sources.Warc.writeRecords(Seq(
+      graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>",
+        s"http://example.com/doc/$id", http))))
+    val rec = graft.sources.Warc.parseRecords(file, Some(codec))
+      .getOrElse(sys.error(s"own WARC must parse (doc $id)")).head
+    graft.sources.Warc.parseHttp(rec.content, Some(codec))
+      .getOrElse(sys.error(s"own HTTP wire grammar must parse (doc $id)"))
   }
 
   /** The crawl-ingest funnel shared by batch and streaming (the SAME
@@ -118,16 +156,7 @@ private[graft] object Crawl {
         }
       }
       .toDF("doc_id", "status", "charset", "title", "n_links", "text", "uri_raw")
-    val canon = parsed
-      .withColumn("url_canon",
-        graft.functions.UrlFunctions.canonicalizeUrl(col("uri_raw")))
-      .withColumn("host",
-        substring_index(substring_index(col("url_canon"), "://", -1), "/", 1))
-      .withColumn("path",
-        substring_index(col("url_canon"), "://", -1)
-          .substr(length(col("host")) + 1,
-            length(substring_index(col("url_canon"), "://", -1))))
-    canon.join(broadcast(hostRobotsRules(s)), Seq("host"), "left")
+    withRobotsRules(parsed, "uri_raw")
       .select(col("doc_id"), col("status"), col("charset"), col("title"),
         col("n_links"), col("text"), col("url_canon"), col("host"), col("path"),
         col("allows"), col("disallows"))
@@ -139,14 +168,192 @@ private[graft] object Crawl {
       .toDF("doc_id", "status", "charset", "title", "n_links", "text",
         "url_canon", "host", "blocked")
   }
+
+  /** Each document's (doc_id, text). */
+  private def docTexts(s: SparkSession, dir: String): Dataset[(Long, String)] = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+  }
+
+  /** Each document's (doc_id, text) cut to printable ASCII ([[cleanSql]]). */
+  private def cleanTexts(s: SparkSession, dir: String): Dataset[(Long, String)] = {
+    import s.implicits._
+    t(s, dir, "documents")
+      .select(col("doc_id").cast("long"),
+        regexp_replace(col("text"), "[^ -~]", "").as("clean"))
+      .as[(Long, String)]
+  }
+
+  /** The oracle side of [[cleanTexts]]' text. */
+  private val cleanSql = "regexp_replace(text, '[^ -~]', '', 'g')"
+
+  /** The 'e' bytes in `b`, the statistic the archive replays re-derive ([[nESql]]). */
+  private def countE(b: Array[Byte]): Long = b.count(_ == 'e').toLong
+
+  /** The oracle side of [[countE]] over the text expression `text`. */
+  private def nESql(text: String): String =
+    s"CAST(strlen($text) - strlen(replace($text, 'e', '')) AS BIGINT)"
+
+  /** One row per WARC record of each document's round trip (doc_id, rec_idx,
+    * warc_type, target_uri, content_length, n_e); `perPartition` sets up the
+    * partition's codecs and returns the per-doc write → parse. */
+  private def warcRecordRows(s: SparkSession, dir: String)(
+      perPartition: () => (Long, String) => Seq[graft.sources.Warc.Record]): DataFrame = {
+    import s.implicits._
+    docTexts(s, dir)
+      .mapPartitions { rows =>
+        val roundTrip = perPartition()
+        rows.flatMap { case (id, text) =>
+          roundTrip(id, text).iterator.zipWithIndex.map { case (r, idx) =>
+            (id, idx, r.warcType, r.targetUri, r.content.length.toLong, countE(r.content))
+          }
+        }
+      }
+      .toDF("doc_id", "rec_idx", "warc_type", "target_uri", "content_length", "n_e")
+      .orderBy("doc_id", "rec_idx")
+  }
+
+  /** Doc `id`'s 1–3 response records, record j "part j: " + text at .../part/j. */
+  private def partRecords(id: Long, text: String): Seq[graft.sources.Warc.Record] =
+    (0 until (id % 3 + 1).toInt).map { j =>
+      graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id-$j>",
+        s"http://example.com/doc/$id/part/$j",
+        s"part $j: $text".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+
+  // x_warc_members / x_warc_zstd: every record of [[partRecords]] from id
+  // arithmetic + the text ('part j: ' is 8 chars, e-free) — a reader that
+  // stops at the first gzip member or zstd frame loses rows
+  private val partRecordsSql =
+    s"""WITH d AS (SELECT doc_id, text, strlen(text) AS n,
+                        CAST(doc_id % 3 + 1 AS INTEGER) AS nrec
+                      FROM documents),
+                r AS (SELECT doc_id, CAST(unnest(range(0, nrec)) AS INTEGER) AS rec_idx,
+                        text, n
+                      FROM d)
+           SELECT doc_id, rec_idx, 'response' AS warc_type,
+                  'http://example.com/doc/' || doc_id || '/part/' || rec_idx AS target_uri,
+                  CAST(8 + n AS BIGINT) AS content_length,
+                  ${nESql("text")} AS n_e
+           FROM r ORDER BY doc_id, rec_idx"""
+
+  /** CTE `d(doc_id, n, chunk, n_e)`: each text's bytes, segment size and 'e's. */
+  private def segmentDocsSql(chunk: String): String =
+    s"""d AS (SELECT doc_id, strlen(text) AS n,
+                        CAST($chunk AS BIGINT) AS chunk,
+                        ${nESql("text")} AS n_e
+                      FROM documents)"""
+
+  /** Segments of an n-byte record cut at `chunk` (a fitting one stays whole, §5.18). */
+  private val nSegmentsSql =
+    "CAST(CASE WHEN n <= chunk THEN 1 ELSE (n + chunk - 1) // chunk END AS BIGINT) AS n_segments"
+
+  /** Each cleaned text through the PDF writer `encode` (text, chars per line,
+    * lines per page) at the id-formula geometry ([[pdfDocsSql]]) and back. */
+  private def pdfRoundTrip(s: SparkSession, dir: String,
+      encode: (String, Int, Int) => Array[Byte]): DataFrame = {
+    import s.implicits._
+    cleanTexts(s, dir)
+      .map { case (id, clean) =>
+        val (nPages, text) = pdfText(
+          encode(clean, (id % 40 + 20).toInt, (id % 7 + 3).toInt), id)
+        (id, nPages, text)
+      }
+      .toDF("doc_id", "n_pages", "text_out")
+      .orderBy("doc_id")
+  }
+
+  /** (page count, text without the writer's line breaks) of doc `id`'s PDF. */
+  private def pdfText(pdf: Array[Byte], id: Long): (Long, String) = {
+    val pages = graft.ext.Pdf.extractText(pdf)
+      .getOrElse(sys.error(s"own PDF must parse (doc $id)"))
+    (pages.length.toLong, pages.mkString.replace("\n", ""))
+  }
+
+  /** CTE `d(doc_id, clean, cpl, lpp)`: the oracle side of the PDF geometry. */
+  private val pdfDocsSql =
+    s"""d AS (SELECT doc_id,
+                        $cleanSql AS clean,
+                        CAST(doc_id % 40 + 20 AS INTEGER) AS cpl,
+                        CAST(doc_id % 7 + 3 AS INTEGER) AS lpp
+                      FROM documents)"""
+
+  /** Pages of `clean` at `cpl` × `lpp` (an empty text still gets one). */
+  private val pdfPagesSql =
+    """CASE WHEN strlen(clean) = 0 THEN 1
+                       ELSE ((strlen(clean) + cpl - 1) // cpl + lpp - 1) // lpp END"""
+
+  // x_pdf_extract / x_pdf_xrefstream: pages by the split formula, text by
+  // writer∘reader identity — the whole 1.4 or 1.5 PDF round trip between
+  private val pdfSql =
+    s"""WITH $pdfDocsSql
+           SELECT doc_id, CAST($pdfPagesSql AS BIGINT) AS n_pages, clean AS text_out
+           FROM d ORDER BY doc_id"""
+
+  /** Doc `id`'s HTML page: title "Doc <id>", then `body`. */
+  private def docPage(id: Long, body: String): String =
+    s"<html><head><title>Doc $id</title></head><body>$body</body></html>"
+
+  /** `text` without markup characters, so it reads back from a page as itself. */
+  private def stripMarkup(text: String): String =
+    text.replace("&", "").replace("<", "").replace(">", "")
+
+  /** The oracle side of [[stripMarkup]] over the text expression `text`. */
+  private def stripMarkupSql(text: String): String =
+    s"replace(replace(replace($text, '&', ''), '<', ''), '>', '')"
+
+  /** Doc `id`'s CDX entries (gen, surt, url, ts, offset, length): gen 0 for
+    * every doc, gen 1 for the re-crawls and re-packs ([[cdxMergeSql]]). */
+  private def cdxGens(id: Long): Seq[(Int, String, String, String, Long, Long)] = {
+    val surt = s"com,example)/doc/$id"
+    val url = s"http://example.com/doc/$id"
+    val sec = f"${id % 86400}%06d"
+    val a = Seq((0, surt, url, s"20260101$sec", id * 100L, 50L + id % 10))
+    val b1 = if (id % 3 == 0)
+      Seq((1, surt, url, s"20260102$sec", id * 100L + 7, 60L + id % 10)) else Nil
+    val b2 = if (id % 5 == 0)
+      Seq((1, surt, url, s"20260101$sec", id * 100L + 13, 70L + id % 10)) else Nil
+    a ++ b1 ++ b2
+  }
+
+  /** Doc `doc_id`'s URL on one of 7 sites, the CDX index fixtures' key. */
+  private def siteUrl: Column = concat(lit("http://site"), (col("doc_id") % 7).cast("string"),
+    lit(".example.com/doc/"), col("doc_id").cast("string"))
+
+  /** The sorted write of a merged CDX index (surt, ts, url, offset, length,
+    * gen), each range partition through a strict CDXJ write∘parse. */
+  private def cdxjRoundTrip(index: DataFrame): DataFrame = {
+    val s = index.sparkSession
+    import s.implicits._
+    index
+      .repartitionByRange(8, col("surt"), col("ts"))
+      .sortWithinPartitions("surt", "ts")
+      .as[(String, String, String, Long, Long, Long)]
+      .mapPartitions { it =>
+        val rows = it.toSeq
+        if (rows.isEmpty) Iterator.empty
+        else {
+          val txt = graft.sources.Cdx.writeCdxj(rows.map { case (surt, ts, url, off, len, _) =>
+            graft.sources.Cdx.Entry(surt, url, ts, off, len)
+          })
+          val back = graft.sources.Cdx.parseCdxj(txt)
+            .getOrElse(sys.error("own merged CDXJ must parse"))
+          back.iterator.zip(rows.iterator).map { case (e, (_, _, _, _, _, gen)) =>
+            (e.surt, e.timestamp, e.url, e.offset, e.length, gen)
+          }
+        }
+      }
+      .toDF("surt", "ts", "url", "offset", "length", "gen")
+  }
+
   // x_crawl_funnel / t27_stream_crawl_funnel, the batch and stream twins:
   // EVERY funnel layer's output re-derived from id arithmetic — status
   // (HTTP), charset class (byte plants), title / link count / visible text
   // incl. the é payload (HTML through the detected decode), canonical URL
   // (RFC 3986) and the RFC 9309 precedence verdict. One wrong byte
   // anywhere shifts a column; the stream must reproduce the batch rows.
-  val crawlFunnelSql =
-    """WITH d AS (SELECT doc_id,
+  private val crawlFunnelSql =
+    s"""WITH d AS (SELECT doc_id,
                         CAST(doc_id % 4 + 1 AS INTEGER) AS k,
                         CAST(doc_id % 5 + 1 AS INTEGER) AS nl
                       FROM documents),
@@ -165,21 +372,14 @@ private[graft] object Crawl {
                   CASE WHEN doc_id % 3 = 0 THEN 'ascii'
                        WHEN doc_id % 3 = 1 THEN 'utf-8' ELSE 'latin-1' END AS charset,
                   title, nl AS n_links, text,
-                  'http://example-' || (doc_id % 50) || '.com'
-                    || '/a/' || (doc_id % 7) || '/page' AS url_canon,
-                  'example-' || (doc_id % 50) || '.com' AS host,
-                  (CASE WHEN (doc_id % 50) % 5 = 1 THEN doc_id % 7 = 1
-                        WHEN (doc_id % 50) % 5 = 2 THEN doc_id % 7 = 3
-                        WHEN (doc_id % 50) % 5 = 3 THEN doc_id % 7 <> 3
-                        WHEN (doc_id % 50) % 5 = 4 THEN doc_id % 7 = 5
-                        ELSE FALSE END) AS blocked
+                  $robotsVerdictSql
            FROM t ORDER BY doc_id"""
 
   // x_cdx_merge / t29_stream_cdx_merge, the batch and stream twins: both
   // generations in closed form, last-gen-wins on (surt, ts) via arg_max —
   // green only if the dedup resolution AND the per-partition CDXJ round
   // trip keep every surviving pointer, batch or streamed
-  val cdxMergeSql =
+  private val cdxMergeSql =
     """WITH g AS (
              SELECT 0 AS gen, 'com,example)/doc/' || doc_id AS surt,
                     'http://example.com/doc/' || doc_id AS url,
@@ -216,35 +416,24 @@ private[graft] object Crawl {
     // from the text alone, so the row is green only if the full
     // write → gzip → gunzip → record-walk loop is lossless. Scan-shaped:
     // flatMap over the doc scan, no shuffle before the cosmetic sort.
-    Query("x_warc_ingest", (s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { rows =>
-          // ONE reusable native Deflater/Inflater per partition: per-row
-          // GZIPOutputStream/GZIPInputStream allocation measurably drifts
-          // full-board timings at sf1 (NOTES round-11 adjudication)
-          val codec = new graft.sources.Warc.GzipCodec
-          rows.flatMap { case (id, text) =>
-            val body = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val meta = s"lang=en,len=${body.length}"
-              .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-            val uri = s"http://example.com/doc/$id"
-            val file = codec.gzip(graft.sources.Warc.writeRecords(Seq(
-              graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>", uri, body),
-              graft.sources.Warc.Record("metadata", s"<urn:uuid:meta-$id>", uri, meta))))
-            val recs = graft.sources.Warc.parseRecords(file, Some(codec))
-              .getOrElse(sys.error(s"own WARC must parse (doc $id)"))
-            recs.iterator.zipWithIndex.map { case (r, idx) =>
-              var ne = 0L
-              r.content.foreach(b => if (b == 'e') ne += 1)
-              (id, idx, r.warcType, r.targetUri, r.content.length.toLong, ne)
-            }
-          }
+    Query("x_warc_ingest", (s, dir) =>
+      warcRecordRows(s, dir) { () =>
+        // ONE reusable native Deflater/Inflater per partition: per-row
+        // GZIPOutputStream/GZIPInputStream allocation measurably drifts
+        // full-board timings at sf1 (NOTES round-11 adjudication)
+        val codec = new graft.sources.Warc.GzipCodec
+        (id, text) => {
+          val body = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          val meta = s"lang=en,len=${body.length}"
+            .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+          val uri = s"http://example.com/doc/$id"
+          val file = codec.gzip(graft.sources.Warc.writeRecords(Seq(
+            graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>", uri, body),
+            graft.sources.Warc.Record("metadata", s"<urn:uuid:meta-$id>", uri, meta))))
+          graft.sources.Warc.parseRecords(file, Some(codec))
+            .getOrElse(sys.error(s"own WARC must parse (doc $id)"))
         }
-        .toDF("doc_id", "rec_idx", "warc_type", "target_uri", "content_length", "n_e")
-        .orderBy("doc_id", "rec_idx")
-    },
+      },
       // WARC replay: both records' lengths, URIs and 'e' byte counts
       // re-derived from the text alone (the metadata record's content is
       // a pure function of the text length) — green only if the
@@ -276,46 +465,15 @@ private[graft] object Crawl {
     // trailer (the classic silent-truncation bug) loses whole records
     // and the row count itself goes red. Scan-shaped: one reused native
     // codec per partition, cosmetic sort only.
-    Query("x_warc_members", (s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { rows =>
-          val codec = new graft.sources.Warc.GzipCodec
-          rows.flatMap { case (id, text) =>
-            val nrec = (id % 3 + 1).toInt
-            val recs = (0 until nrec).map { j =>
-              graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id-$j>",
-                s"http://example.com/doc/$id/part/$j",
-                s"part $j: $text".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            }
-            val file = graft.sources.Warc.gzipPerRecord(recs, codec)
-            val back = graft.sources.Warc.parseRecords(file, Some(codec))
-              .getOrElse(sys.error(s"own multi-member WARC must parse (doc $id)"))
-            back.iterator.zipWithIndex.map { case (r, idx) =>
-              var ne = 0L
-              r.content.foreach(b => if (b == 'e') ne += 1)
-              (id, idx, r.warcType, r.targetUri, r.content.length.toLong, ne)
-            }
-          }
-        }
-        .toDF("doc_id", "rec_idx", "warc_type", "target_uri", "content_length", "n_e")
-        .orderBy("doc_id", "rec_idx")
-    },
-      // multi-member replay: every record of the member-per-record
-      // layout re-derived from id arithmetic + the text ('part j: ' is
-      // 8 chars, e-free) — a first-member-only reader loses rows
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS n,
-                        CAST(doc_id % 3 + 1 AS INTEGER) AS nrec
-                      FROM documents),
-                r AS (SELECT doc_id, CAST(unnest(range(0, nrec)) AS INTEGER) AS rec_idx,
-                        text, n
-                      FROM d)
-           SELECT doc_id, rec_idx, 'response' AS warc_type,
-                  'http://example.com/doc/' || doc_id || '/part/' || rec_idx AS target_uri,
-                  CAST(8 + n AS BIGINT) AS content_length,
-                  CAST(strlen(text) - strlen(replace(text, 'e', '')) AS BIGINT) AS n_e
-           FROM r ORDER BY doc_id, rec_idx"""),
+    Query("x_warc_members", (s, dir) =>
+      warcRecordRows(s, dir) { () =>
+        val codec = new graft.sources.Warc.GzipCodec
+        (id, text) =>
+          graft.sources.Warc.parseRecords(
+            graft.sources.Warc.gzipPerRecord(partRecords(id, text), codec), Some(codec))
+            .getOrElse(sys.error(s"own multi-member WARC must parse (doc $id)"))
+      },
+      partRecordsSql),
 
     // zstd WARC transport (RFC 8878) — the compression CommonCrawl index
     // files and modern archives actually ship: each doc's records are
@@ -327,53 +485,22 @@ private[graft] object Crawl {
     // at the first frame or trips on the skippable frame loses rows and
     // the count goes red. Same closed-form oracle family as
     // x_warc_members. Scan-shaped: reused native contexts per partition.
-    Query("x_warc_zstd", (s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { rows =>
-          val zc = graft.sources.ZstdCodec.forPartition() // native ctxs freed on task end
-          rows.flatMap { case (id, text) =>
-            val nrec = (id % 3 + 1).toInt
-            val recs = (0 until nrec).map { j =>
-              graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id-$j>",
-                s"http://example.com/doc/$id/part/$j",
-                s"part $j: $text".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            }
-            val file = new java.io.ByteArrayOutputStream()
-            recs.zipWithIndex.foreach { case (r, j) =>
-              file.write(zc.zstd(graft.sources.Warc.writeRecords(Seq(r))))
-              if (j == 0) // per-segment metadata side-channel
-                file.write(zc.skippableFrame(
-                  s"seg-meta:$id".getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
-            }
-            val back = graft.sources.Warc
-              .parseRecords(file.toByteArray, None, Some(zc))
-              .getOrElse(sys.error(s"own zstd WARC must parse (doc $id)"))
-            back.iterator.zipWithIndex.map { case (r, idx) =>
-              var ne = 0L
-              r.content.foreach(b => if (b == 'e') ne += 1)
-              (id, idx, r.warcType, r.targetUri, r.content.length.toLong, ne)
-            }
+    Query("x_warc_zstd", (s, dir) =>
+      warcRecordRows(s, dir) { () =>
+        val zc = graft.sources.ZstdCodec.forPartition() // native ctxs freed on task end
+        (id, text) => {
+          val file = new java.io.ByteArrayOutputStream()
+          partRecords(id, text).zipWithIndex.foreach { case (r, j) =>
+            file.write(zc.zstd(graft.sources.Warc.writeRecords(Seq(r))))
+            if (j == 0) // per-segment metadata side-channel
+              file.write(zc.skippableFrame(
+                s"seg-meta:$id".getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
           }
+          graft.sources.Warc.parseRecords(file.toByteArray, None, Some(zc))
+            .getOrElse(sys.error(s"own zstd WARC must parse (doc $id)"))
         }
-        .toDF("doc_id", "rec_idx", "warc_type", "target_uri", "content_length", "n_e")
-        .orderBy("doc_id", "rec_idx")
-    },
-      // zstd replay: identical closed form to x_warc_members — the
-      // transport differs (frame-per-record zstd + a skippable frame),
-      // the record grammar does not
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS n,
-                        CAST(doc_id % 3 + 1 AS INTEGER) AS nrec
-                      FROM documents),
-                r AS (SELECT doc_id, CAST(unnest(range(0, nrec)) AS INTEGER) AS rec_idx,
-                        text, n
-                      FROM d)
-           SELECT doc_id, rec_idx, 'response' AS warc_type,
-                  'http://example.com/doc/' || doc_id || '/part/' || rec_idx AS target_uri,
-                  CAST(8 + n AS BIGINT) AS content_length,
-                  CAST(strlen(text) - strlen(replace(text, 'e', '')) AS BIGINT) AS n_e
-           FROM r ORDER BY doc_id, rec_idx"""),
+      },
+      partRecordsSql),
 
     // PDF text extraction — after HTML the most common document format
     // in a web corpus, exactly oracled through the closed-form pair in
@@ -388,37 +515,9 @@ private[graft] object Crawl {
     // byte offset, stream length or string escape anywhere in the
     // codec and the hash goes red. Scan-shaped: per-row encode/decode
     // in the scan map, no shuffle before the cosmetic sort.
-    Query("x_pdf_extract", (s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          regexp_replace(col("text"), "[^ -~]", "").as("clean"))
-        .as[(Long, String)]
-        .map { case (id, clean) =>
-          val cpl = (id % 40 + 20).toInt // chars per line
-          val lpp = (id % 7 + 3).toInt // lines per page
-          val pdf = graft.ext.Pdf.encodeDocPdf(clean, cpl, lpp)
-          val pages = graft.ext.Pdf.extractText(pdf)
-            .getOrElse(sys.error(s"own PDF must parse (doc $id)"))
-          (id, pages.length.toLong, pages.mkString.replace("\n", ""))
-        }
-        .toDF("doc_id", "n_pages", "text_out")
-        .orderBy("doc_id")
-    },
-      // PDF replay: page count from the ceil-division split formula,
-      // text by writer∘reader identity on the sanitized chars — the
-      // whole xref/page-tree/Flate/Tj round trip sits between the two
-      """WITH d AS (SELECT doc_id,
-                        regexp_replace(text, '[^ -~]', '', 'g') AS clean,
-                        CAST(doc_id % 40 + 20 AS INTEGER) AS cpl,
-                        CAST(doc_id % 7 + 3 AS INTEGER) AS lpp
-                      FROM documents)
-           SELECT doc_id,
-                  CAST(CASE WHEN strlen(clean) = 0 THEN 1
-                       ELSE ((strlen(clean) + cpl - 1) // cpl + lpp - 1) // lpp
-                       END AS BIGINT) AS n_pages,
-                  clean AS text_out
-           FROM d ORDER BY doc_id"""),
+    Query("x_pdf_extract", (s, dir) =>
+      pdfRoundTrip(s, dir, graft.ext.Pdf.encodeDocPdf),
+      pdfSql),
 
     // the PDF-1.5 form of x_pdf_extract — the modern majority of real
     // PDFs: cross-reference STREAMS (/Type /XRef, W-array fields, PNG
@@ -429,37 +528,9 @@ private[graft] object Crawl {
     // is the entire 1.5 grammar — predictor undo, W-field decode, type-2
     // (in-ObjStm) entry resolution, ObjStm header/offset walk. One wrong
     // byte in any of them and the hash goes red. Scan-shaped.
-    Query("x_pdf_xrefstream", (s, dir) => {
-      import s.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          regexp_replace(col("text"), "[^ -~]", "").as("clean"))
-        .as[(Long, String)]
-        .map { case (id, clean) =>
-          val cpl = (id % 40 + 20).toInt // chars per line
-          val lpp = (id % 7 + 3).toInt // lines per page
-          val pdf = graft.ext.Pdf.encodeDocPdfXrefStream(clean, cpl, lpp)
-          val pages = graft.ext.Pdf.extractText(pdf)
-            .getOrElse(sys.error(s"own 1.5 PDF must parse (doc $id)"))
-          (id, pages.length.toLong, pages.mkString.replace("\n", ""))
-        }
-        .toDF("doc_id", "n_pages", "text_out")
-        .orderBy("doc_id")
-    },
-      // same formula as x_pdf_extract — identical oracle, but the Spark
-      // side round-trips through the 1.5 xref-stream/ObjStm writer, so
-      // a green hash certifies the predictor/W-field/type-2 machinery
-      """WITH d AS (SELECT doc_id,
-                        regexp_replace(text, '[^ -~]', '', 'g') AS clean,
-                        CAST(doc_id % 40 + 20 AS INTEGER) AS cpl,
-                        CAST(doc_id % 7 + 3 AS INTEGER) AS lpp
-                      FROM documents)
-           SELECT doc_id,
-                  CAST(CASE WHEN strlen(clean) = 0 THEN 1
-                       ELSE ((strlen(clean) + cpl - 1) // cpl + lpp - 1) // lpp
-                       END AS BIGINT) AS n_pages,
-                  clean AS text_out
-           FROM d ORDER BY doc_id"""),
+    Query("x_pdf_xrefstream", (s, dir) =>
+      pdfRoundTrip(s, dir, graft.ext.Pdf.encodeDocPdfXrefStream),
+      pdfSql),
 
     // WET conversion records — the CommonCrawl derived-text format most
     // LLM corpus work actually starts from: alongside each response
@@ -473,16 +544,11 @@ private[graft] object Crawl {
     // the envelope or the refers-to linkage goes red. Scan-shaped.
     Query("x_wet_extract", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          regexp_replace(col("text"), "[^ -~]", "").as("clean"))
-        .as[(Long, String)]
+      cleanTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { case (id, clean) =>
-            val html = "<html><head><title>Doc " + id + "</title></head><body><p>" +
-              clean.replace("&", "").replace("<", "").replace(">", "") +
-              "</p></body></html>"
+            val html = docPage(id, s"<p>${stripMarkup(clean)}</p>")
             val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n" + html)
               .getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val wetText = graft.sources.Html.extract(html).text
@@ -506,12 +572,8 @@ private[graft] object Crawl {
       // WET replay: conversion text by the tag-strip/collapse replay,
       // linkage by construction — green only if extractor, envelope and
       // refers-to all survive the round trip
-      """WITH d AS (SELECT doc_id,
-                        trim(regexp_replace(
-                          replace(replace(replace(
-                            regexp_replace(text, '[^ -~]', '', 'g'),
-                            '&', ''), '<', ''), '>', ''),
-                          ' +', ' ', 'g')) AS wet
+      s"""WITH d AS (SELECT doc_id,
+                        trim(regexp_replace(${stripMarkupSql(cleanSql)}, ' +', ' ', 'g')) AS wet
                       FROM documents)
            SELECT doc_id,
                   '<urn:uuid:doc-' || doc_id || '>' AS refers_to,
@@ -534,19 +596,14 @@ private[graft] object Crawl {
     // count, first link) re-derives from id arithmetic in closed form.
     Query("x_wat_extract", (s, dir) => {
       import s.implicits._
-      val raw = t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          regexp_replace(col("text"), "[^ -~]", "").as("clean"))
-        .as[(Long, String)]
+      val raw = cleanTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { case (id, clean) =>
             val k = (id % 5).toInt
             val links = (0 until k).map(j => s"http://example.com/doc/$id/ref/$j")
-            val html = s"<html><head><title>Doc $id</title></head><body>" +
-              links.map(u => s"""<a href="$u">ref</a>""").mkString +
-              "<p>" + clean.replace("&", "").replace("<", "")
-                .replace(">", "").replace("\"", "") + "</p></body></html>"
+            val html = docPage(id, links.map(u => s"""<a href="$u">ref</a>""").mkString +
+              "<p>" + stripMarkup(clean).replace("\"", "") + "</p>")
             val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n" + html)
               .getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val resp = graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>",
@@ -584,12 +641,10 @@ private[graft] object Crawl {
       // HTTP-block byte count is the full header+page-layout formula, so
       // one byte of drift in page build, wire framing or the JSON
       // envelope shifts it
-      """WITH d AS (SELECT doc_id,
+      s"""WITH d AS (SELECT doc_id,
                         CAST(doc_id % 5 AS BIGINT) AS k,
                         strlen(CAST(doc_id AS VARCHAR)) AS L,
-                        strlen(replace(replace(replace(replace(
-                          regexp_replace(text, '[^ -~]', '', 'g'),
-                          '&', ''), '<', ''), '>', ''), '"', '')) AS C
+                        strlen(replace(${stripMarkupSql(cleanSql)}, '"', '')) AS C
                       FROM documents)
            SELECT doc_id,
                   '<urn:uuid:doc-' || doc_id || '>' AS refers_to,
@@ -612,15 +667,14 @@ private[graft] object Crawl {
     // counts. Exactly oracled from (id, j) arithmetic. ONE shuffle.
     Query("x_wat_link_graph", (s, dir) => {
       import s.implicits._
-      val wat = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      val wat = docIds(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { id =>
             val k = (id % 5).toInt
             val links = (0 until k).map(j =>
               s"http://site${(id + j) % 20}.example.com/p$j")
-            val html = s"<html><head><title>Doc $id</title></head><body>" +
-              links.map(u => s"""<a href="$u">x</a>""").mkString + "</body></html>"
+            val html = docPage(id, links.map(u => s"""<a href="$u">x</a>""").mkString)
             val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html)
               .getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val resp = graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>",
@@ -672,10 +726,7 @@ private[graft] object Crawl {
     // Scan-shaped: per-row kernels, reused codec, cosmetic sort only.
     Query("x_pdf_funnel", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          regexp_replace(col("text"), "[^ -~]", "").as("clean"))
-        .as[(Long, String)]
+      cleanTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { case (id, clean) =>
@@ -683,9 +734,8 @@ private[graft] object Crawl {
             val body =
               if (isPdf)
                 graft.ext.Pdf.encodeDocPdf(clean, (id % 40 + 20).toInt, (id % 7 + 3).toInt)
-              else ("<html><head><title>Doc " + id + "</title></head><body><p>" +
-                clean.replace("&", "").replace("<", "").replace(">", "") +
-                "</p></body></html>").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+              else docPage(id, s"<p>${stripMarkup(clean)}</p>")
+                .getBytes(java.nio.charset.StandardCharsets.UTF_8)
             val ctype = if (isPdf) "application/pdf" else "text/html; charset=UTF-8"
             // real wire framing: PDFs stream out chunked, HTML gzip'd —
             // the dispatch must run on the DECODED body
@@ -695,17 +745,10 @@ private[graft] object Crawl {
               else ("Content-Encoding: gzip\r\n", codec.gzip(body))
             val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n$wireHdr\r\n")
               .getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ wire
-            val file = codec.gzip(graft.sources.Warc.writeRecords(Seq(
-              graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>",
-                s"http://example.com/doc/$id", http))))
-            val rec = graft.sources.Warc.parseRecords(file, Some(codec))
-              .getOrElse(sys.error(s"own WARC must parse (doc $id)")).head
-            val resp = graft.sources.Warc.parseHttp(rec.content, Some(codec))
-              .getOrElse(sys.error(s"own HTTP must parse (doc $id)"))
+            val resp = httpRoundTrip(id, http, codec)
             if (resp.contentType.startsWith("application/pdf")) {
-              val pages = graft.ext.Pdf.extractText(resp.body)
-                .getOrElse(sys.error(s"own PDF must parse (doc $id)"))
-              (id, "pdf", pages.length.toLong, pages.mkString.replace("\n", ""))
+              val (nPages, text) = pdfText(resp.body, id)
+              (id, "pdf", nPages, text)
             } else {
               val ex = graft.sources.Html.extract(
                 new String(resp.body, java.nio.charset.StandardCharsets.UTF_8))
@@ -719,21 +762,13 @@ private[graft] object Crawl {
       // dispatch replay: the PDF branch by the split formula + identity,
       // the HTML branch by tag-strip/whitespace-normalize — green only
       // if the content-type routing AND both extractors are exact
-      """WITH d AS (SELECT doc_id,
-                        regexp_replace(text, '[^ -~]', '', 'g') AS clean,
-                        CAST(doc_id % 40 + 20 AS INTEGER) AS cpl,
-                        CAST(doc_id % 7 + 3 AS INTEGER) AS lpp
-                      FROM documents)
+      s"""WITH $pdfDocsSql
            SELECT doc_id,
                   CASE WHEN doc_id % 2 = 0 THEN 'pdf' ELSE 'html' END AS kind,
-                  CAST(CASE WHEN doc_id % 2 = 0 THEN
-                         CASE WHEN strlen(clean) = 0 THEN 1
-                         ELSE ((strlen(clean) + cpl - 1) // cpl + lpp - 1) // lpp END
+                  CAST(CASE WHEN doc_id % 2 = 0 THEN $pdfPagesSql
                        ELSE 1 END AS BIGINT) AS n_pages,
                   CASE WHEN doc_id % 2 = 0 THEN clean
-                       ELSE trim(regexp_replace(
-                         replace(replace(replace(clean, '&', ''), '<', ''), '>', ''),
-                         ' +', ' ', 'g')) END AS text_out
+                       ELSE trim(regexp_replace(${stripMarkupSql("clean")}, ' +', ' ', 'g')) END AS text_out
            FROM d ORDER BY doc_id"""),
 
     // CDX/SURT crawl-index pruning — the crawl-scale form of the
@@ -753,9 +788,7 @@ private[graft] object Crawl {
     Query("x_cdx_prune", (s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long"), col("text"),
-          concat(lit("http://site"), (col("doc_id") % 7).cast("string"),
-            lit(".example.com/doc/"), col("doc_id").cast("string")).as("url"))
+        .select(col("doc_id").cast("long"), col("text"), siteUrl.as("url"))
         .withColumn("surt", graft.functions.UrlFunctions.surtKey(col("url")))
         .withColumn("segment", (col("doc_id") % 40).cast("int"))
         .as[(Long, String, String, String, Int)]
@@ -788,8 +821,7 @@ private[graft] object Crawl {
             val rec = graft.sources.Warc.parseRecords(member, Some(codec))
               .getOrElse(sys.error("indexed member must parse")).head
             val id = rec.targetUri.substring(rec.targetUri.lastIndexOf('/') + 1).toLong
-            var ne = 0L
-            rec.content.foreach(b => if (b == 'e') ne += 1)
+            val ne = countE(rec.content)
             (id, e.surt, rec.content.length.toLong, ne)
           }
         }
@@ -822,9 +854,7 @@ private[graft] object Crawl {
     Query("x_cdx_cluster", (s, dir) => {
       import s.implicits._
       val keyed = t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          concat(lit("http://site"), (col("doc_id") % 7).cast("string"),
-            lit(".example.com/doc/"), col("doc_id").cast("string")).as("url"))
+        .select(col("doc_id").cast("long"), siteUrl.as("url"))
         .withColumn("surt", graft.functions.UrlFunctions.surtKey(col("url")))
         .withColumn("ts", concat(lit("20260101"),
           lpad((col("doc_id") % 86400).cast("string"), 6, "0")))
@@ -875,43 +905,14 @@ private[graft] object Crawl {
     // write — with a strict CDXJ write∘parse round trip per partition.
     Query("x_cdx_merge", (s, dir) => {
       import s.implicits._
-      val gens = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          val surt = s"com,example)/doc/$id"
-          val url = s"http://example.com/doc/$id"
-          val sec = f"${id % 86400}%06d"
-          val a = Seq((0, surt, url, s"20260101$sec", id * 100L, 50L + id % 10))
-          val b1 = if (id % 3 == 0)
-            Seq((1, surt, url, s"20260102$sec", id * 100L + 7, 60L + id % 10)) else Nil
-          val b2 = if (id % 5 == 0)
-            Seq((1, surt, url, s"20260101$sec", id * 100L + 13, 70L + id % 10)) else Nil
-          a ++ b1 ++ b2
-        }
+      val gens = docIds(s, dir).flatMap(cdxGens)
         .toDF("gen", "surt", "url", "ts", "offset", "length")
-      gens.groupBy("surt", "ts")
+      cdxjRoundTrip(gens.groupBy("surt", "ts")
         .agg(max_by(struct(col("gen"), col("url"), col("offset"), col("length")),
           col("gen")).as("e"))
         .select(col("surt"), col("ts"), col("e.url").as("url"),
           col("e.offset").as("offset"), col("e.length").as("length"),
-          col("e.gen").cast("long").as("gen"))
-        .repartitionByRange(8, col("surt"), col("ts"))
-        .sortWithinPartitions("surt", "ts")
-        .as[(String, String, String, Long, Long, Long)]
-        .mapPartitions { it =>
-          val rows = it.toSeq
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val txt = graft.sources.Cdx.writeCdxj(rows.map { case (surt, ts, url, off, len, _) =>
-              graft.sources.Cdx.Entry(surt, url, ts, off, len)
-            })
-            val back = graft.sources.Cdx.parseCdxj(txt)
-              .getOrElse(sys.error("own merged CDXJ must parse"))
-            back.iterator.zip(rows.iterator).map { case (e, (_, _, _, _, _, gen)) =>
-              (e.surt, e.timestamp, e.url, e.offset, e.length, gen)
-            }
-          }
-        }
-        .toDF("surt", "ts", "url", "offset", "length", "gen")
+          col("e.gen").cast("long").as("gen")))
         .orderBy("surt", "ts")
     },
       cdxMergeSql),
@@ -955,8 +956,7 @@ private[graft] object Crawl {
             val back = graft.sources.Warc
               .parseRecords(codec.gzip(graft.sources.Warc.writeRecords(Seq(rec))), Some(codec))
               .getOrElse(sys.error(s"own WARC must parse (doc $id)")).head
-            var ne = 0L
-            back.content.foreach(b => if (b == 'e') ne += 1)
+            val ne = countE(back.content)
             (id, back.warcType, back.recordId, back.refersTo, back.payloadDigest,
               back.content.length.toLong, ne)
           }
@@ -995,8 +995,7 @@ private[graft] object Crawl {
     // shifts a byte count). Scan-shaped: reused codec per partition.
     Query("x_http_chunked", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
+      docTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec // reused per partition
           rows.map { case (id, text) =>
@@ -1019,17 +1018,10 @@ private[graft] object Crawl {
             head.append("\r\n")
             val content = head.toString
               .getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ wire
-            val file = codec.gzip(graft.sources.Warc.writeRecords(Seq(
-              graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>",
-                s"http://example.com/doc/$id", content))))
-            val rec = graft.sources.Warc.parseRecords(file, Some(codec))
-              .getOrElse(sys.error(s"own WARC must parse (doc $id)")).head
-            val http = graft.sources.Warc.parseHttp(rec.content, Some(codec))
-              .getOrElse(sys.error(s"own HTTP wire grammar must parse (doc $id)"))
+            val http = httpRoundTrip(id, content, codec)
             if (!java.util.Arrays.equals(http.body, body))
               sys.error(s"decoded body must round-trip byte-exactly (doc $id)")
-            var ne = 0L
-            http.body.foreach(b => if (b == 'e') ne += 1)
+            val ne = countE(http.body)
             (id, http.transferEncoding, http.contentEncoding,
               http.body.length.toLong, ne)
           }
@@ -1037,8 +1029,6 @@ private[graft] object Crawl {
         .toDF("doc_id", "te", "ce", "body_len", "n_e")
         .orderBy("doc_id")
     },
-      // HTTP-in-WARC replay: status/type from id arithmetic, body stats
-      // from the text — green only if both envelope walks are lossless
       // wire-grammar replay: encodings and decoded-body stats from the
       // class formula and the text alone — green only if chunk framing,
       // trailers, gzip members and the zlib Adler trailer all decode to
@@ -1063,8 +1053,7 @@ private[graft] object Crawl {
     // pins extracted_len=NULL on exactly the truncated rows).
     Query("x_warc_truncated", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
+      docTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { case (id, text) =>
@@ -1094,11 +1083,9 @@ private[graft] object Crawl {
             // the flag gate: truncated payloads are stored, NOT extracted
             val extractedLen =
               if (resp.truncated.nonEmpty) None else Some(resp.content.length.toLong)
-            var ne = 0L
-            if (resp.truncated.isEmpty) resp.content.foreach(b => if (b == 'e') ne += 1)
             (id, types.mkString(","), resp.truncated,
               resp.content.length.toLong, extractedLen,
-              if (resp.truncated.isEmpty) Some(ne) else None)
+              if (resp.truncated.isEmpty) Some(countE(resp.content)) else None)
           }
         }
         .toDF("doc_id", "record_types", "truncated", "stored_len", "extracted_len", "n_e")
@@ -1137,8 +1124,7 @@ private[graft] object Crawl {
     // the text alone. Scan-shaped: per-row kernel, reused codec.
     Query("x_warc_segmented", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
+      docTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { case (id, text) =>
@@ -1159,8 +1145,7 @@ private[graft] object Crawl {
               .getOrElse(sys.error(s"own chain must reassemble (doc $id)"))
             val resp = recs.find(_.warcType == "response")
               .getOrElse(sys.error(s"response must survive (doc $id)"))
-            var ne = 0L
-            resp.content.foreach(b => if (b == 'e') ne += 1)
+            val ne = countE(resp.content)
             (id, segs.length.toLong, recs.length.toLong, resp.content.length.toLong, ne)
           }
         }
@@ -1171,14 +1156,8 @@ private[graft] object Crawl {
       // already-fitting record stays unsegmented per §5.18), reassembled
       // bytes and stats from the text — green only if split, interleave,
       // round trip and strict reassembly are all exact
-      """WITH d AS (SELECT doc_id, strlen(text) AS n,
-                        CAST(doc_id % 50 + 20 AS BIGINT) AS chunk,
-                        CAST(strlen(text) - strlen(replace(text, 'e', ''))
-                          AS BIGINT) AS n_e
-                      FROM documents)
-           SELECT doc_id,
-                  CAST(CASE WHEN n <= chunk THEN 1
-                       ELSE (n + chunk - 1) // chunk END AS BIGINT) AS n_segments,
+      s"""WITH ${segmentDocsSql("doc_id % 50 + 20")}
+           SELECT doc_id, $nSegmentsSql,
                   CAST(2 AS BIGINT) AS n_records,
                   CAST(n AS BIGINT) AS reassembled_len, n_e
            FROM d ORDER BY doc_id"""),
@@ -1193,8 +1172,7 @@ private[graft] object Crawl {
     // as the in-stream form. Same closed-form oracle family.
     Query("x_warc_reassemble_dist", (s, dir) => {
       import s.implicits._
-      val members = t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
+      val members = docTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.flatMap { case (id, text) =>
@@ -1217,8 +1195,7 @@ private[graft] object Crawl {
           val recs = graft.sources.Warc.reassemble(segs)
             .getOrElse(sys.error(s"chain must reassemble (doc $id)"))
           val r = recs.head
-          var ne = 0L
-          r.content.foreach(b => if (b == 'e') ne += 1)
+          val ne = countE(r.content)
           (id, segs.length.toLong, r.content.length.toLong, ne)
         }
         .toDF("doc_id", "n_segments", "reassembled_len", "n_e")
@@ -1226,14 +1203,8 @@ private[graft] object Crawl {
     },
       // distributed form: same family, chunk 32..95, one member per
       // segment — the shuffle-then-reassemble path
-      """WITH d AS (SELECT doc_id, strlen(text) AS n,
-                        CAST(doc_id % 64 + 32 AS BIGINT) AS chunk,
-                        CAST(strlen(text) - strlen(replace(text, 'e', ''))
-                          AS BIGINT) AS n_e
-                      FROM documents)
-           SELECT doc_id,
-                  CAST(CASE WHEN n <= chunk THEN 1
-                       ELSE (n + chunk - 1) // chunk END AS BIGINT) AS n_segments,
+      s"""WITH ${segmentDocsSql("doc_id % 64 + 32")}
+           SELECT doc_id, $nSegmentsSql,
                   CAST(n AS BIGINT) AS reassembled_len, n_e
            FROM d ORDER BY doc_id"""),
 
@@ -1247,8 +1218,7 @@ private[graft] object Crawl {
     // wrong byte in either envelope shifts a stat. Scan-shaped.
     Query("x_http_extract", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
+      docTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec // reused per partition
           rows.map { case (id, text) =>
@@ -1260,21 +1230,16 @@ private[graft] object Crawl {
               s"X-Doc: $id\r\n\r\n")
               .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
             val content = head ++ body
-            val file = codec.gzip(graft.sources.Warc.writeRecords(Seq(
-              graft.sources.Warc.Record("response", s"<urn:uuid:doc-$id>",
-                s"http://example.com/doc/$id", content))))
-            val rec = graft.sources.Warc.parseRecords(file, Some(codec))
-              .getOrElse(sys.error(s"own WARC must parse (doc $id)")).head
-            val http = graft.sources.Warc.parseHttp(rec.content)
-              .getOrElse(sys.error(s"own HTTP block must parse (doc $id)"))
-            var ne = 0L
-            http.body.foreach(b => if (b == 'e') ne += 1)
+            val http = httpRoundTrip(id, content, codec)
+            val ne = countE(http.body)
             (id, http.status, http.contentType, http.body.length.toLong, ne)
           }
         }
         .toDF("doc_id", "status", "content_type", "body_len", "n_e")
         .orderBy("doc_id")
     },
+      // HTTP-in-WARC replay: status/type from id arithmetic, body stats
+      // from the text — green only if both envelope walks are lossless
       """SELECT doc_id,
                   CAST(CASE WHEN doc_id % 3 = 0 THEN 200
                             WHEN doc_id % 3 = 1 THEN 301 ELSE 404 END AS INTEGER) AS status,
@@ -1297,7 +1262,7 @@ private[graft] object Crawl {
     // doc scan.
     Query("x_charset_detect", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val k = (id % 4 + 1).toInt
           val base = s"sample text nr ${id % 100}"
@@ -1355,7 +1320,7 @@ private[graft] object Crawl {
     // Scan-shaped: map over the doc scan.
     Query("x_charset_sniff", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val k = (id % 4 + 1).toInt
           val baseS = s"sample text nr ${id % 100}"
@@ -1384,11 +1349,6 @@ private[graft] object Crawl {
         .toDF("doc_id", "charset", "source", "n_non_ascii", "decoded_len")
         .orderBy("doc_id")
     },
-      // extraction replay: title/text/link-count built from id arithmetic
-      // alone — green only if scripts, styles, comments and tags drop,
-      // named AND numeric entities decode (&#x2019; → ’, &#8212; → —),
-      // the quoted-'>' attribute does not end its tag early, and the
-      // bare '<' comparisons survive as literal prose
       // sniff replay: label, winning precedence level, high-byte count
       // and decoded length per construction class — green only if the
       // BOM/http/meta/structural order, the lying-header fall-through
@@ -1430,7 +1390,7 @@ private[graft] object Crawl {
     // the string. Scan-shaped: map over the doc scan, cosmetic sort only.
     Query("x_html_extract", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val k = (id % 5 + 1).toInt
           val links = (0 until k).map(i =>
@@ -1449,6 +1409,11 @@ private[graft] object Crawl {
         .toDF("doc_id", "title", "n_links", "text", "n_chars")
         .orderBy("doc_id")
     },
+      // extraction replay: title/text/link-count built from id arithmetic
+      // alone — green only if scripts, styles, comments and tags drop,
+      // named AND numeric entities decode (&#x2019; → ’, &#8212; → —),
+      // the quoted-'>' attribute does not end its tag early, and the
+      // bare '<' comparisons survive as literal prose
       """WITH d AS (SELECT doc_id, CAST(doc_id % 5 + 1 AS INTEGER) AS k FROM documents),
                 t AS (SELECT doc_id, k,
                         'Doc ' || doc_id || ' t' || (doc_id % 7) AS title,
@@ -1472,7 +1437,7 @@ private[graft] object Crawl {
     // exact. Scan-shaped: flatMap over the doc scan, cosmetic sort only.
     Query("x_sitemap_parse", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
           val ns = (id % 4 + 1).toInt
           val entries = (0 until ns).map { i =>
@@ -1516,7 +1481,7 @@ private[graft] object Crawl {
     // entry walks are all exact. Scan-shaped: flatMap over the doc scan.
     Query("x_sitemap_index", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
           val h = id % 50
           val ns = (id % 3 + 1).toInt
@@ -1579,7 +1544,7 @@ private[graft] object Crawl {
     // re-derive from id arithmetic. Scan-shaped.
     Query("x_robots_sitemap", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
           val h = id % 20
           val robots =
@@ -1641,7 +1606,7 @@ private[graft] object Crawl {
     // the ONE hash join shuffle IS the job. Exactly oracled per doc.
     Query("x_recrawl_plan", (s, dir) => {
       import s.implicits._
-      val discovered = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      val discovered = docIds(s, dir)
         .map { id =>
           val day = (id * 7) % 28 + 1
           val xml = "<urlset><url><loc>http://example.com/doc/" + id + "</loc>" +
@@ -1694,16 +1659,8 @@ private[graft] object Crawl {
         when(id % 4 === 1, concat(lit("/a/./"), seg, lit("/page")))
           .when(id % 4 === 2, concat(lit("/a/x/../"), seg, lit("/page")))
           .otherwise(concat(lit("/a/"), seg, lit("/page"))))
-      val urls = t(s, dir, "documents").select(id.cast("long").as("doc_id"), raw.as("url_raw"))
-        .withColumn("url_canon",
-          graft.functions.UrlFunctions.canonicalizeUrl(col("url_raw")))
-        .withColumn("host",
-          substring_index(substring_index(col("url_canon"), "://", -1), "/", 1))
-        .withColumn("path",
-          substring_index(col("url_canon"), "://", -1)
-            .substr(length(col("host")) + 1,
-              length(substring_index(col("url_canon"), "://", -1))))
-      urls.join(broadcast(hostRobotsRules(s)), Seq("host"), "left")
+      withRobotsRules(
+        t(s, dir, "documents").select(id.cast("long").as("doc_id"), raw.as("url_raw")), "url_raw")
         .select(col("doc_id"), col("url_canon"), col("host"), col("path"),
           col("allows"), col("disallows"))
         .as[(Long, String, String, String, Seq[String], Seq[String])]
@@ -1722,15 +1679,8 @@ private[graft] object Crawl {
       // seg 3; 3: Disallow /a/ + LONGER Allow /a/3/ blocks everything
       // EXCEPT seg 3; 4: wildcard /*/5/ (len 5) beats Allow / (len 1)
       // on seg 5; 0: no rules
-      """SELECT doc_id,
-                  'http://example-' || (doc_id % 50) || '.com'
-                    || '/a/' || (doc_id % 7) || '/page' AS url_canon,
-                  'example-' || (doc_id % 50) || '.com' AS host,
-                  (CASE WHEN (doc_id % 50) % 5 = 1 THEN doc_id % 7 = 1
-                        WHEN (doc_id % 50) % 5 = 2 THEN doc_id % 7 = 3
-                        WHEN (doc_id % 50) % 5 = 3 THEN doc_id % 7 <> 3
-                        WHEN (doc_id % 50) % 5 = 4 THEN doc_id % 7 = 5
-                        ELSE FALSE END) AS blocked,
+      s"""SELECT doc_id,
+                  $robotsVerdictSql,
                   CAST(CASE WHEN (doc_id % 50) % 5 = 0 THEN 0
                             WHEN (doc_id % 50) % 5 = 2 THEN 1
                             ELSE 2 END AS INTEGER) AS n_rules
@@ -1942,22 +1892,10 @@ private[graft] object Crawl {
     Query("t29_stream_cdx_merge", (s, dir) => {
       import s.implicits._
       val result = staged("t29", dir) { stage =>
-        def genDf(gen: Int) = t(s, dir, "documents")
-          .select(col("doc_id").cast("long")).as[Long]
-          .flatMap { id =>
-            val surt = s"com,example)/doc/$id"
-            val url = s"http://example.com/doc/$id"
-            val sec = f"${id % 86400}%06d"
-            if (gen == 0)
-              Seq((0L, surt, url, s"20260101$sec", id * 100L, 50L + id % 10))
-            else {
-              val b1 = if (id % 3 == 0)
-                Seq((1L, surt, url, s"20260102$sec", id * 100L + 7, 60L + id % 10)) else Nil
-              val b2 = if (id % 5 == 0)
-                Seq((1L, surt, url, s"20260101$sec", id * 100L + 13, 70L + id % 10)) else Nil
-              b1 ++ b2
-            }
-          }
+        def genDf(gen: Int) = docIds(s, dir)
+          .flatMap(id => cdxGens(id).collect {
+            case (g, surt, url, ts, off, len) if g == gen => (g.toLong, surt, url, ts, off, len)
+          })
           .toDF("gen", "surt", "url", "ts", "offset", "length")
         val now = System.currentTimeMillis()
         LocalFs.writeSingleParquet(genDf(0), s"$stage/gen_a.parquet").setLastModified(now - 120000)
@@ -1974,28 +1912,9 @@ private[graft] object Crawl {
               concat_ws("", col("surt"), col("ts")))
             graft.sinks.EsBulkSink.upsertById(keyed, indexDir, "__id", "gen")
           })
-        s.read.parquet(indexDir).drop("__id")
+        cdxjRoundTrip(s.read.parquet(indexDir).drop("__id")
           .select(col("surt"), col("ts"), col("url"), col("offset"),
-            col("length"), col("gen").cast("long").as("gen"))
-          .repartitionByRange(8, col("surt"), col("ts"))
-          .sortWithinPartitions("surt", "ts")
-          .as[(String, String, String, Long, Long, Long)]
-          .mapPartitions { it =>
-            val rows = it.toSeq
-            if (rows.isEmpty) Iterator.empty
-            else {
-              val txt = graft.sources.Cdx.writeCdxj(rows.map {
-                case (surt, ts, url, off, len, _) =>
-                  graft.sources.Cdx.Entry(surt, url, ts, off, len)
-              })
-              val back = graft.sources.Cdx.parseCdxj(txt)
-                .getOrElse(sys.error("own merged CDXJ must parse"))
-              back.iterator.zip(rows.iterator).map { case (e, (_, _, _, _, _, gen)) =>
-                (e.surt, e.timestamp, e.url, e.offset, e.length, gen)
-              }
-            }
-          }
-          .toDF("surt", "ts", "url", "offset", "length", "gen")
+            col("length"), col("gen").cast("long").as("gen")))
           // DISTRIBUTED materialization (not a driver collect): the merged
           // index must outlive the staged scratch files deleted below, so
           // it is pinned in executor storage — a corpus-scale CDX index
@@ -2019,7 +1938,7 @@ private[graft] object Crawl {
     // the oracle re-derives in closed form. Scan-shaped.
     Query("x_main_content", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val k = (id % 4 + 1).toInt
           val paras = (0 until k).map(j =>
@@ -2076,7 +1995,7 @@ private[graft] object Crawl {
     // run or dropped cell shifts the sum. Scan-shaped.
     Query("x_html_tables", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
           val k = (id % 3 + 1).toInt
           val html = new StringBuilder(s"<html><body><h1>Doc $id</h1>")
@@ -2136,7 +2055,7 @@ private[graft] object Crawl {
     // real extract→classify chain. Exactly oracled per (doc, column).
     Query("x_table_types", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
           val c = (id % 4 + 2).toInt
           val r = (id % 3 + 2).toInt
@@ -2186,7 +2105,7 @@ private[graft] object Crawl {
     // without datetime. Exactly oracled per class. Scan-shaped.
     Query("x_date_extract", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val d1 = s"2026-0${id % 9 + 1}-1${id % 10}"
           val d2 = s"2025-0${id % 9 + 1}-2${id % 10}"
@@ -2225,7 +2144,7 @@ private[graft] object Crawl {
     // empty-href-falls-through-to-og. Exactly oracled per class.
     Query("x_canonical_url", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val canon = s"http://example.com/c/$id"
           val og = s"http://og.example.com/$id"
@@ -2262,7 +2181,7 @@ private[graft] object Crawl {
     // Exactly oracled from the planting mods. Scan-shaped.
     Query("x_meta_robots", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val m1 = Seq(
             if (id % 2 == 0) Some("NoIndex") else None,
@@ -2309,10 +2228,7 @@ private[graft] object Crawl {
       import s.implicits._
       val mimes = Array("image/png", "image/gif", "image/jpeg", "audio/wave",
         "application/pdf", "application/x-gzip", "text/html", "text/plain")
-      t(s, dir, "documents")
-        .select(col("doc_id").cast("long"),
-          regexp_replace(col("text"), "[^ -~]", "").as("clean"))
-        .as[(Long, String)]
+      cleanTexts(s, dir)
         .mapPartitions { rows =>
           val codec = new graft.sources.Warc.GzipCodec
           rows.map { case (id, clean) =>
@@ -2545,7 +2461,7 @@ private[graft] object Crawl {
     // codegen JSON path, cosmetic sort only.
     Query("x_jsonld_extract", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val wc = (id % 90 + 10).toInt
           val day = f"2026-08-${id % 28 + 1}%02d"
@@ -2638,7 +2554,7 @@ private[graft] object Crawl {
       // discipline, r12 bench-fidelity item): the benched plan below is
       // scan → extraction kernels, not row fabrication
       val stage = persistentPath("linkgraph", dir)
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val nl = (id % 5 + 1).toInt
           val anchors = (0 until nl).map { i =>

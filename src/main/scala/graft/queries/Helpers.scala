@@ -3,7 +3,7 @@ package queries
 
 import graft.LocalFs.deleteRecursively
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The inputs, synthetic fixtures, scratch paths and staging every query
@@ -14,6 +14,14 @@ import org.apache.spark.sql.functions._
 private[graft] object Helpers {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame = Tables.load(s, dir, name)
+
+  /** Each document's `doc_id` as a typed scan: the key the per-doc
+    * synthetic payload fixtures (archives, media) are built from.
+    */
+  def docIds(s: SparkSession, dir: String): Dataset[Long] = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+  }
 
   /** events + string `day` bucket — the reference's `month` partition
     * analog at non-degenerate cardinality (SURVEY.md §1.1).

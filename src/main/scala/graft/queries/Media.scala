@@ -2,7 +2,7 @@ package graft
 package queries
 
 import graft.queries.Helpers._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,6 +41,118 @@ private[graft] object Media {
       (x, y, _) => cell(x / 2, y / 2) + (if (x % 2 == 0 && y % 2 == 0) -3 else 1),
       y => ((filterSeed + y) % 5).toInt)
   }
+
+  /** The oracle side of [[dhashPlanted]]'s high and low 32-bit halves. */
+  private def dhashHiSql(id: String): String = s"(($id + 77777) * 2654435761) % 4294967296"
+  private def dhashLoSql(id: String): String = s"($id * 2654435761) % 4294967296"
+
+  /** Doc `id`'s formula PNG, all five scanline filters in turn ([[formulaPngSql]]). */
+  private def formulaPng(id: Long): Array[Byte] =
+    graft.ext.Multimodal.encodePng(
+      (id % 13 + 4).toInt, (id * 3 % 11 + 4).toInt, (id % 4 + 1).toInt,
+      (x, y, c) => ((id * 31 + x * 7 + y * 13 + c * 101) % 256).toInt,
+      y => ((id + y) % 5).toInt)
+
+  /** CTEs `d` and `s(doc_id, width, height, channels, sums)` of [[formulaPng]],
+    * sums[c + 1] channel c's exact pixel sum. */
+  private val formulaPngSql =
+    """d AS (SELECT doc_id,
+                        CAST(doc_id % 13 + 4 AS INTEGER) AS width,
+                        CAST(doc_id * 3 % 11 + 4 AS INTEGER) AS height,
+                        CAST(doc_id % 4 + 1 AS INTEGER) AS channels
+                      FROM documents),
+                s AS (SELECT doc_id, width, height, channels,
+                        list_transform(range(0, 4), c ->
+                          CASE WHEN c < channels THEN
+                            CAST(list_sum(flatten(list_transform(range(0, width), x ->
+                              list_transform(range(0, height), y ->
+                                (doc_id * 31 + x * 7 + y * 13 + c * 101) % 256)))) AS BIGINT)
+                          END) AS sums
+                      FROM d)"""
+
+  /** Per image of `media`, decoded: its shape and first `nChannels` channel sums. */
+  private def pixelSums(media: Dataset[graft.ext.Multimodal.MediaRow], nChannels: Int): DataFrame =
+    graft.ext.Multimodal.pixelStats(media).toDF()
+      .select(Seq(col("id").as("doc_id"), col("width"), col("height"), col("channels"),
+        col("n_pixels")) ++ (0 until nChannels).map(c => col(s"c${c}_sum")): _*)
+      .orderBy("doc_id")
+
+  /** Doc `id`'s formula PCM tone at `rate` Hz as a WAV file. */
+  private def toneWav(id: Long, rate: Int): Array[Byte] = {
+    val bits = if (id % 3 == 0) 8 else 16
+    val sample: (Int, Int) => Int =
+      if (bits == 8) (f, c) => ((id * 7 + f * 13 + c * 37) % 241).toInt - 120
+      else (f, c) => ((id * 31 + f * 17 + c * 97) % 4001).toInt - 2000
+    graft.ext.Multimodal.encodeWav(rate, bits, (id % 2 + 1).toInt, (id % 50 + 20).toInt, sample)
+  }
+
+  /** Top-5 by exact inner product over `emb(id, e)` for the bounded query
+    * set (id ≡ 0 mod 50, id < 500), broadcast ([[embedTopKSql]]). */
+  private def embedTopK(emb: DataFrame): DataFrame = {
+    val q = emb.filter(col("id") % 50 === 0 && col("id") < 500)
+      .select(col("id").as("query_id"), col("e").as("eq"))
+    val scored = emb.select(col("id").as("neighbor_id"), col("e").as("ec"))
+      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("ip",
+        graft.functions.VectorFunctions.dot(col("eq"), col("ec")).cast("long"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("ip").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("ip"))
+      .orderBy("query_id", "rank")
+  }
+
+  /** [[embedTopK]] over the CTEs `embSql`, which end in `emb(doc_id, e)`. */
+  private def embedTopKSql(embSql: String): String =
+    s"""WITH $embSql,
+                pairs AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
+                        CAST(list_sum(list_transform(range(0, 8), k ->
+                          q.e[k + 1] * c.e[k + 1])) AS BIGINT) AS ip
+                      FROM emb q JOIN emb c
+                        ON q.doc_id % 50 = 0 AND q.doc_id < 500
+                           AND c.doc_id != q.doc_id),
+                rk AS (SELECT *, row_number() OVER (
+                          PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rnk
+                      FROM pairs)
+           SELECT query_id, CAST(rnk AS INTEGER) AS rank, neighbor_id, ip
+           FROM rk WHERE rnk <= 5 ORDER BY query_id, rank"""
+
+  /** Doc `id`'s nf-frame animated GIF of gray `px(frame, x, y)`, encoded and
+    * decoded back: (width, height, each frame's sum). */
+  private def gifFrameSums(id: Long, nf: Int, px: (Int, Int, Int) => Int): (Int, Int, Array[Long]) = {
+    val gif = graft.ext.Multimodal.encodeGifAnimated(
+      (id % 9 + 4).toInt, (id * 3 % 7 + 4).toInt, nf, px)
+    val (dw, dh, frames) = graft.ext.Multimodal.decodeGifFrames(gif)
+      .getOrElse(sys.error(s"own animated GIF must decode (doc $id)"))
+    (dw, dh, frames.map { pix =>
+      var sum = 0L
+      var k = 0
+      while (k < pix.length) { sum += pix(k); k += 3 } // channel 0
+      sum
+    })
+  }
+
+  /** Doc `id`'s formula MP4 sample table through the real box walk:
+    * (timescale, deltas, sizes ([[mp4SizesSql]]), 1-based sync samples). */
+  private def mp4Samples(id: Long): (Int, Array[Int], Array[Int], Array[Int]) = {
+    val ts = ((id % 4 + 1) * 600).toInt
+    val nRuns = (id % 3 + 1).toInt
+    val runs = Array.tabulate(nRuns) { j =>
+      (((id + j * 7) % 5 + 1).toInt, ((id * 7 + j * 11) % 400 + 100).toInt)
+    }
+    val n = runs.map(_._1).sum
+    val sizes = Array.tabulate(n)(i => ((id * 13 + i * 29) % 900 + 100).toInt)
+    val ks = (id % 4 + 2).toInt
+    val mp4 = graft.ext.Multimodal.encodeMp4(
+      (id % 640 + 16).toInt, (id % 360 + 16).toInt, ts, runs, sizes, ks)
+    graft.ext.Multimodal.decodeMp4Samples(mp4)
+      .getOrElse(sys.error(s"own MP4 must decode (doc $id)"))
+  }
+
+  /** The first `n` sample sizes of `doc_id`'s [[mp4Samples]]. */
+  private def mp4SizesSql(n: String): String =
+    s"list_transform(range(0, $n), i -> (doc_id * 13 + i * 29) % 900 + 100)"
+
   def queries: Seq[Query] = Seq(
     // multimodal feature pipeline end-to-end, EXACTLY ORACLED: per doc a
     // real PNG is encoded from a SQL-expressible pixel formula (size,
@@ -54,14 +166,8 @@ private[graft] object Media {
     // mapPartitions batched decode: a map over the scan, no shuffle.
     Query("x_multimodal_features", (s, dir) => {
       import s.implicits._
-      val media = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 13 + 4).toInt; val h = (id * 3 % 11 + 4).toInt
-          val ch = (id % 4 + 1).toInt
-          graft.ext.Multimodal.MediaRow(id, graft.ext.Multimodal.encodePng(w, h, ch,
-            (x, y, c) => ((id * 31 + x * 7 + y * 13 + c * 101) % 256).toInt,
-            y => ((id + y) % 5).toInt), "png")
-        }
+      val media = docIds(s, dir)
+        .map(id => graft.ext.Multimodal.MediaRow(id, formulaPng(id), "png"))
       def f(i: Int) = floor(element_at(col("features"), i + 1).cast("double") * 100 + lit(0.5))
         .cast("long").as(s"f${i}_centi")
       graft.ext.Multimodal.resizePlan(
@@ -77,25 +183,13 @@ private[graft] object Media {
           s"""CAST(floor(CAST(CAST(CASE WHEN channels > $c
                    THEN CAST(sums[${c + 1}] AS DOUBLE) / (width * height)
                    ELSE 0.0 END AS REAL) AS DOUBLE) * 100 + 0.5) AS BIGINT) AS f${c}_centi"""
-        s"""WITH d AS (SELECT doc_id,
-                        CAST(doc_id % 13 + 4 AS INTEGER) AS width,
-                        CAST(doc_id * 3 % 11 + 4 AS INTEGER) AS height,
-                        CAST(doc_id % 4 + 1 AS INTEGER) AS channels
-                      FROM documents),
-                s AS (SELECT doc_id, width, height, channels,
-                        list_transform(range(0, 4), c ->
-                          CASE WHEN c < channels THEN
-                            list_sum(flatten(list_transform(range(0, width), x ->
-                              list_transform(range(0, height), y ->
-                                (doc_id * 31 + x * 7 + y * 13 + c * 101) % 256))))
-                          END) AS sums,
-                        round(least(8.0 / width, 8.0 / height, 1.0), 4) AS scale
-                      FROM d)
+        s"""WITH $formulaPngSql,
+                sc AS (SELECT *, round(least(8.0 / width, 8.0 / height, 1.0), 4) AS scale FROM s)
            SELECT doc_id, width, height, CAST(1 AS INTEGER) AS n_frames,
                   CAST(floor(width * scale) AS INTEGER) AS out_w,
                   CAST(floor(height * scale) AS INTEGER) AS out_h,
                   ${f(0)}, ${f(1)}, ${f(2)}, ${f(3)}
-           FROM s ORDER BY doc_id"""
+           FROM sc ORDER BY doc_id"""
       }),
 
     // REAL PNG pixel decode, exactly oracled at the sum level: encode the
@@ -106,35 +200,13 @@ private[graft] object Media {
     // byte anywhere in inflate or unfiltering shifts a sum.
     Query("x_multimodal_pixels", (s, dir) => {
       import s.implicits._
-      val media = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (id % 13 + 4).toInt; val h = (id * 3 % 11 + 4).toInt
-          val ch = (id % 4 + 1).toInt
-          graft.ext.Multimodal.MediaRow(id, graft.ext.Multimodal.encodePng(w, h, ch,
-            (x, y, c) => ((id * 31 + x * 7 + y * 13 + c * 101) % 256).toInt,
-            y => ((id + y) % 5).toInt), "png")
-        }
-      graft.ext.Multimodal.pixelStats(media).toDF()
-        .select(col("id").as("doc_id"), col("width"), col("height"), col("channels"),
-          col("n_pixels"), col("c0_sum"), col("c1_sum"), col("c2_sum"), col("c3_sum"))
-        .orderBy("doc_id")
+      pixelSums(docIds(s, dir)
+        .map(id => graft.ext.Multimodal.MediaRow(id, formulaPng(id), "png")), 4)
     },
       // the REAL PNG codec round-trip: per-channel pixel sums recomputed
       // from the same (doc_id, x, y, c) formula the Spark side encoded —
       // any inflate or filter-reconstruction defect shifts a sum
-      """WITH d AS (SELECT doc_id,
-                        CAST(doc_id % 13 + 4 AS INTEGER) AS width,
-                        CAST(doc_id * 3 % 11 + 4 AS INTEGER) AS height,
-                        CAST(doc_id % 4 + 1 AS INTEGER) AS channels
-                      FROM documents),
-                s AS (SELECT doc_id, width, height, channels,
-                        list_transform(range(0, 4), c ->
-                          CASE WHEN c < channels THEN
-                            CAST(list_sum(flatten(list_transform(range(0, width), x ->
-                              list_transform(range(0, height), y ->
-                                (doc_id * 31 + x * 7 + y * 13 + c * 101) % 256)))) AS BIGINT)
-                          END) AS sums
-                      FROM d)
+      s"""WITH $formulaPngSql
            SELECT doc_id, width, height, channels,
                   CAST(width AS BIGINT) * height AS n_pixels,
                   sums[1] AS c0_sum, sums[2] AS c1_sum, sums[3] AS c2_sum, sums[4] AS c3_sum
@@ -149,16 +221,12 @@ private[graft] object Media {
     // this row pins it against DuckDB arithmetic end-to-end.
     Query("x_multimodal_gif", (s, dir) => {
       import s.implicits._
-      val media = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      pixelSums(docIds(s, dir)
         .map { id =>
           val w = (id % 11 + 4).toInt; val h = (id * 5 % 9 + 4).toInt
           graft.ext.Multimodal.MediaRow(id, graft.ext.Multimodal.encodeGif(w, h,
             (x, y) => ((id * 37 + x * 11 + y * 17) % 256).toInt), "gif")
-        }
-      graft.ext.Multimodal.pixelStats(media).toDF()
-        .select(col("id").as("doc_id"), col("width"), col("height"), col("channels"),
-          col("n_pixels"), col("c0_sum"), col("c1_sum"), col("c2_sum"))
-        .orderBy("doc_id")
+        }, 3)
     },
       // GIF: grayscale palette means all three channel sums equal the
       // formula's gray sum
@@ -194,7 +262,7 @@ private[graft] object Media {
     // both entropy layouts.
     Query("x_multimodal_jpeg", (s, dir) => {
       import s.implicits._
-      val media = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      pixelSums(docIds(s, dir)
         .map { id =>
           val wb = (id % 3 + 1).toInt; val hb = (id * 3 % 4 + 1).toInt
           val ch = if (id % 2 == 0) 1 else 3
@@ -204,11 +272,7 @@ private[graft] object Media {
           graft.ext.Multimodal.MediaRow(id, enc(wb * 8, hb * 8, ch,
             (x, y, _) => ((id * 29 + (x / 8) * 31 + (y / 8) * 47) % 256).toInt,
             graft.ext.Jpeg.qUnit), "jpeg")
-        }
-      graft.ext.Multimodal.pixelStats(media).toDF()
-        .select(col("id").as("doc_id"), col("width"), col("height"), col("channels"),
-          col("n_pixels"), col("c0_sum"), col("c1_sum"), col("c2_sum"))
-        .orderBy("doc_id")
+        }, 3)
     },
       // JPEG: constant 8x8 blocks + unit quantizer = lossless roundtrip;
       // channel sum = 64 * sum of the per-block formula values; gray docs
@@ -243,18 +307,9 @@ private[graft] object Media {
     // mapPartitions, no shuffle at any corpus size.
     Query("x_multimodal_audio", (s, dir) => {
       import s.implicits._
-      val media = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val bits = if (id % 3 == 0) 8 else 16
-          val nch = (id % 2 + 1).toInt
-          val rate = (id % 8 * 4000 + 8000).toInt
-          val nf = (id % 50 + 20).toInt
-          val sample: (Int, Int) => Int =
-            if (bits == 8) (f, c) => ((id * 7 + f * 13 + c * 37) % 241).toInt - 120
-            else (f, c) => ((id * 31 + f * 17 + c * 97) % 4001).toInt - 2000
-          graft.ext.Multimodal.MediaRow(id,
-            graft.ext.Multimodal.encodeWav(rate, bits, nch, nf, sample), "wav")
-        }
+      val media = docIds(s, dir)
+        .map(id => graft.ext.Multimodal.MediaRow(id,
+          toneWav(id, (id % 8 * 4000 + 8000).toInt), "wav"))
       graft.ext.Multimodal.audioStats(media).toDF()
         .select(col("id").as("doc_id"), col("sample_rate"), col("bits"), col("channels"),
           col("n_frames"), col("c0_sum"), col("c0_sq"), col("c0_peak"), col("c0_zc"),
@@ -309,34 +364,18 @@ private[graft] object Media {
     // loads belong on the gated IVF/LSH candidate paths.
     Query("x_image_embed_topk", (s, dir) => {
       import s.implicits._
-      val emb = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      embedTopK(docIds(s, dir)
         .map { id =>
-          val w = (id % 13 + 4).toInt; val h = (id * 3 % 11 + 4).toInt
-          val ch = (id % 4 + 1).toInt
-          val png = graft.ext.Multimodal.encodePng(w, h, ch,
-            (x, y, c) => ((id * 31 + x * 7 + y * 13 + c * 101) % 256).toInt,
-            y => ((id + y) % 5).toInt)
-          val (dw, dh, dch, pix) = graft.ext.Multimodal.decodePixels(png)
+          val (dw, dh, dch, pix) = graft.ext.Multimodal.decodePixels(formulaPng(id))
             .getOrElse(sys.error(s"own PNG must decode (doc $id)"))
           (id, graft.ext.Multimodal.imageEmbed(dw, dh, dch, pix).map(_.toDouble))
-        }.toDF("id", "e")
-      val q = emb.filter(col("id") % 50 === 0 && col("id") < 500)
-        .select(col("id").as("query_id"), col("e").as("eq"))
-      val scored = emb.select(col("id").as("neighbor_id"), col("e").as("ec"))
-        .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .withColumn("ip",
-          graft.functions.VectorFunctions.dot(col("eq"), col("ec")).cast("long"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("ip").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("ip"))
-        .orderBy("query_id", "rank")
+        }.toDF("id", "e"))
     },
       // decode → embed → retrieve replayed decode-free: the oracle
       // re-derives each embedding from the pixel formula (4×2 patch sums
       // of channel 0 under the fixed integer projection), then ranks
       // exact integer inner products
-      """WITH d AS (SELECT doc_id,
+      embedTopKSql("""d AS (SELECT doc_id,
                         CAST(doc_id % 13 + 4 AS INTEGER) AS w,
                         CAST(doc_id * 3 % 11 + 4 AS INTEGER) AS h
                       FROM documents),
@@ -351,18 +390,7 @@ private[graft] object Media {
                         list_transform(range(0, 8), k ->
                           list_sum(list_transform(range(0, 8), j ->
                             ((k * 7 + j * 3) % 5 - 2) * cs[j + 1]))) AS e
-                      FROM cells),
-                pairs AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
-                        CAST(list_sum(list_transform(range(0, 8), k ->
-                          q.e[k + 1] * c.e[k + 1])) AS BIGINT) AS ip
-                      FROM emb q JOIN emb c
-                        ON q.doc_id % 50 = 0 AND q.doc_id < 500
-                           AND c.doc_id != q.doc_id),
-                rk AS (SELECT *, row_number() OVER (
-                          PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rnk
-                      FROM pairs)
-           SELECT query_id, CAST(rnk AS INTEGER) AS rank, neighbor_id, ip
-           FROM rk WHERE rnk <= 5 ORDER BY query_id, rank"""),
+                      FROM cells)""")),
 
     // the audio twin of x_image_embed_topk — decode → envelope-embed →
     // retrieve, fully REAL end to end: each doc's formula PCM tone is
@@ -375,34 +403,16 @@ private[graft] object Media {
     // embeddings, broadcast query side, one top-k window.
     Query("x_audio_embed_topk", (s, dir) => {
       import s.implicits._
-      val emb = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      embedTopK(docIds(s, dir)
         .map { id =>
-          val bits = if (id % 3 == 0) 8 else 16
-          val nch = (id % 2 + 1).toInt
-          val nf = (id % 50 + 20).toInt
-          val sample: (Int, Int) => Int =
-            if (bits == 8) (f, c) => ((id * 7 + f * 13 + c * 37) % 241).toInt - 120
-            else (f, c) => ((id * 31 + f * 17 + c * 97) % 4001).toInt - 2000
-          val wav = graft.ext.Multimodal.encodeWav(8000, bits, nch, nf, sample)
-          val (_, _, dch, samples) = graft.ext.Multimodal.decodeWavSamples(wav)
+          val (_, _, dch, samples) = graft.ext.Multimodal.decodeWavSamples(toneWav(id, 8000))
             .getOrElse(sys.error(s"own WAV must decode (doc $id)"))
           (id, graft.ext.Multimodal.audioEmbed(dch, samples).map(_.toDouble))
-        }.toDF("id", "e")
-      val q = emb.filter(col("id") % 50 === 0 && col("id") < 500)
-        .select(col("id").as("query_id"), col("e").as("eq"))
-      val scored = emb.select(col("id").as("neighbor_id"), col("e").as("ec"))
-        .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .withColumn("ip",
-          graft.functions.VectorFunctions.dot(col("eq"), col("ec")).cast("long"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("ip").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("ip"))
-        .orderBy("query_id", "rank")
+        }.toDF("id", "e"))
     },
       // the audio twin: 8-window loudness envelope re-derived from the
       // tone formula (window of frame f = f*8//nf), exact integer dots
-      """WITH d AS (SELECT doc_id,
+      embedTopKSql("""d AS (SELECT doc_id,
                         CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS bits,
                         CAST(doc_id % 50 + 20 AS BIGINT) AS nf
                       FROM documents),
@@ -414,18 +424,7 @@ private[graft] object Media {
                                 THEN (doc_id * 7 + f * 13) % 241 - 120
                                 ELSE (doc_id * 31 + f * 17) % 4001 - 2000 END)
                             ELSE 0 END))) AS e
-                      FROM d),
-                pairs AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
-                        CAST(list_sum(list_transform(range(0, 8), k ->
-                          q.e[k + 1] * c.e[k + 1])) AS BIGINT) AS ip
-                      FROM emb q JOIN emb c
-                        ON q.doc_id % 50 = 0 AND q.doc_id < 500
-                           AND c.doc_id != q.doc_id),
-                rk AS (SELECT *, row_number() OVER (
-                          PARTITION BY query_id ORDER BY ip DESC, neighbor_id) AS rnk
-                      FROM pairs)
-           SELECT query_id, CAST(rnk AS INTEGER) AS rank, neighbor_id, ip
-           FROM rk WHERE rnk <= 5 ORDER BY query_id, rank"""),
+                      FROM d)""")),
 
     // REAL multi-frame video decode, exactly oracled: each doc carries a
     // formula ANIMATED GIF (per-frame full-canvas images; the pure-JVM
@@ -439,19 +438,12 @@ private[graft] object Media {
     // scan, no shuffle before the cosmetic sort.
     Query("x_multimodal_video", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
-          val w = (id % 9 + 4).toInt; val h = (id * 3 % 7 + 4).toInt
-          val nf = (id % 6 + 2).toInt
-          val gif = graft.ext.Multimodal.encodeGifAnimated(w, h, nf,
+          val (dw, dh, sums) = gifFrameSums(id, (id % 6 + 2).toInt,
             (f, x, y) => ((id * 23 + f * 53 + x * 11 + y * 17) % 256).toInt)
-          val (dw, dh, frames) = graft.ext.Multimodal.decodeGifFrames(gif)
-            .getOrElse(sys.error(s"own animated GIF must decode (doc $id)"))
-          frames.iterator.zipWithIndex.map { case (pix, f) =>
-            var sum = 0L
-            var k = 0
-            while (k < pix.length) { sum += pix(k); k += 3 } // channel 0
-            (id, f, dw, dh, frames.length, f % 2 == 0, sum)
+          sums.iterator.zipWithIndex.map { case (sum, f) =>
+            (id, f, dw, dh, sums.length, f % 2 == 0, sum)
           }
         }
         .toDF("doc_id", "frame_idx", "width", "height", "n_frames", "sampled", "c0_sum")
@@ -487,22 +479,14 @@ private[graft] object Media {
     // per-video window after a scan-shaped decode; no other shuffle.
     Query("x_video_scenecut", (s, dir) => {
       import s.implicits._
-      val sums = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      val sums = docIds(s, dir)
         .flatMap { id =>
-          val w = (id % 9 + 4).toInt; val h = (id * 3 % 7 + 4).toInt
           val nf = (id % 5 + 3).toInt
           val cut = (id % (nf - 1) + 1).toInt
-          val gif = graft.ext.Multimodal.encodeGifAnimated(w, h, nf,
+          val (dw, dh, sums) = gifFrameSums(id, nf,
             (f, x, y) => ((id * 23 + x * 11 + y * 17) % 112).toInt
               + (f * 7 % 16) + (if (f >= cut) 128 else 0))
-          val (dw, dh, frames) = graft.ext.Multimodal.decodeGifFrames(gif)
-            .getOrElse(sys.error(s"own animated GIF must decode (doc $id)"))
-          frames.iterator.zipWithIndex.map { case (pix, f) =>
-            var sum = 0L
-            var k = 0
-            while (k < pix.length) { sum += pix(k); k += 3 }
-            (id, f, dw, dh, frames.length, sum)
-          }
+          sums.iterator.zipWithIndex.map { case (sum, f) => (id, f, dw, dh, sums.length, sum) }
         }
         .toDF("doc_id", "frame_idx", "width", "height", "n_frames", "c0_sum")
       val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
@@ -556,7 +540,7 @@ private[graft] object Media {
     // only shuffle is the per-clip argmax window.
     Query("x_audio_pitch", (s, dir) => {
       import s.implicits._
-      val lagged = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      val lagged = docIds(s, dir)
         .flatMap { id =>
           val p = (id % 8 + 4).toInt
           val n = (id % 40 + 60).toInt
@@ -625,7 +609,7 @@ private[graft] object Media {
     // batched map over the doc scan, no shuffle before the cosmetic sort.
     Query("x_audio_resample", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val nch = (id % 2 + 1).toInt
           val n = (id % 50 + 40).toInt
@@ -693,20 +677,9 @@ private[graft] object Media {
     // the doc scan, no shuffle before the cosmetic sort.
     Query("x_video_samples", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
-          val ts = ((id % 4 + 1) * 600).toInt
-          val nRuns = (id % 3 + 1).toInt
-          val runs = Array.tabulate(nRuns) { j =>
-            (((id + j * 7) % 5 + 1).toInt, ((id * 7 + j * 11) % 400 + 100).toInt)
-          }
-          val n = runs.map(_._1).sum
-          val sizes = Array.tabulate(n)(i => ((id * 13 + i * 29) % 900 + 100).toInt)
-          val ks = (id % 4 + 2).toInt
-          val mp4 = graft.ext.Multimodal.encodeMp4(
-            (id % 640 + 16).toInt, (id % 360 + 16).toInt, ts, runs, sizes, ks)
-          val (dts, deltas, dsizes, sync) = graft.ext.Multimodal.decodeMp4Samples(mp4)
-            .getOrElse(sys.error(s"own MP4 must decode (doc $id)"))
+          val (dts, deltas, dsizes, sync) = mp4Samples(id)
           var dur = 0L
           deltas.foreach(dur += _)
           var bytes = 0L; var mx = 0L
@@ -719,7 +692,7 @@ private[graft] object Media {
     },
       // sample-table replay: stts run totals, stsz sums/max and the
       // every-k stss count re-derived in closed form from the formulas
-      """WITH d AS (SELECT doc_id,
+      s"""WITH d AS (SELECT doc_id,
                         CAST((doc_id % 4 + 1) * 600 AS INTEGER) AS timescale,
                         CAST(doc_id % 3 + 1 AS INTEGER) AS r,
                         CAST(doc_id % 4 + 2 AS INTEGER) AS ks
@@ -734,8 +707,7 @@ private[graft] object Media {
                           cnts[j] * dels[j])) AS BIGINT) AS total_duration
                       FROM runs),
                 sz AS (SELECT doc_id, timescale, n_samples, total_duration, ks,
-                        list_transform(range(0, CAST(n_samples AS INTEGER)), i ->
-                          (doc_id * 13 + i * 29) % 900 + 100) AS sizes
+                        ${mp4SizesSql("CAST(n_samples AS INTEGER)")} AS sizes
                       FROM agg)
            SELECT doc_id, timescale, n_samples, total_duration,
                   CAST(list_sum(sizes) AS BIGINT) AS total_bytes,
@@ -754,20 +726,9 @@ private[graft] object Media {
     // only the cosmetic sort adds an exchange — pinned in PlanSpec.
     Query("x_video_bitrate", (s, dir) => {
       import s.implicits._
-      val samples = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      val samples = docIds(s, dir)
         .flatMap { id =>
-          val ts = ((id % 4 + 1) * 600).toInt
-          val nRuns = (id % 3 + 1).toInt
-          val runs = Array.tabulate(nRuns) { j =>
-            (((id + j * 7) % 5 + 1).toInt, ((id * 7 + j * 11) % 400 + 100).toInt)
-          }
-          val n = runs.map(_._1).sum
-          val sizes = Array.tabulate(n)(i => ((id * 13 + i * 29) % 900 + 100).toInt)
-          val ks = (id % 4 + 2).toInt
-          val mp4 = graft.ext.Multimodal.encodeMp4(
-            (id % 640 + 16).toInt, (id % 360 + 16).toInt, ts, runs, sizes, ks)
-          val (_, deltas, dsizes, sync) = graft.ext.Multimodal.decodeMp4Samples(mp4)
-            .getOrElse(sys.error(s"own MP4 must decode (doc $id)"))
+          val (_, deltas, dsizes, sync) = mp4Samples(id)
           val syncSet = sync.toSet
           dsizes.iterator.zipWithIndex.map { case (sz, i) =>
             (id, i, deltas(i), sz, syncSet.contains(i + 1))
@@ -791,7 +752,7 @@ private[graft] object Media {
     },
       // bitrate replay: burst windows, GOP membership (i // ks) and byte
       // totals re-derived from the size/sync formulas in closed form
-      """WITH d AS (SELECT doc_id,
+      s"""WITH d AS (SELECT doc_id,
                         CAST(doc_id % 3 + 1 AS INTEGER) AS r,
                         CAST(doc_id % 4 + 2 AS INTEGER) AS ks
                       FROM documents),
@@ -799,10 +760,7 @@ private[graft] object Media {
                         CAST(list_sum(list_transform(range(0, r), j ->
                           (doc_id + j * 7) % 5 + 1)) AS INTEGER) AS n
                       FROM d),
-                sz AS (SELECT doc_id, ks, n,
-                        list_transform(range(0, n), i ->
-                          (doc_id * 13 + i * 29) % 900 + 100) AS sizes
-                      FROM agg)
+                sz AS (SELECT doc_id, ks, n, ${mp4SizesSql("n")} AS sizes FROM agg)
            SELECT doc_id,
                   CAST(n AS BIGINT) AS n_samples,
                   CAST(list_sum(sizes) AS BIGINT) AS total_bytes,
@@ -829,7 +787,7 @@ private[graft] object Media {
     // the same min-over-threshold. One map-side-combined groupBy.
     Query("x_audio_onset", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .flatMap { id =>
           val n = (id % 40 + 64).toInt
           val b = (id % 8 + 4).toInt // onset block (4 frames per block)
@@ -874,13 +832,13 @@ private[graft] object Media {
                   CAST(list_sum(es) AS BIGINT) AS total_energy
            FROM e ORDER BY doc_id"""),
 
-    // multimodal metadata plumbing: payload bytes → shape/frames metadata
-    // (decode itself is a stubbed mapPartitions — see graft.ext.Multimodal)
+    // multimodal metadata plumbing: payload bytes → shape/frames metadata.
     // frame-sampling SCHEDULE: k=4 uniformly spaced frame indices per media
     // item — the deterministic half of video frame-sampling (which frames
-    // to decode), fully oracled; the decode itself stays the documented
-    // stub. sequence→transform→posexplode: per-row, no shuffle, the
-    // schedule generation is scan-speed at any corpus size
+    // to decode), fully oracled; the frame decode itself is
+    // x_multimodal_video's real animated-GIF decoder.
+    // sequence→transform→posexplode: per-row, no shuffle, the schedule
+    // generation is scan-speed at any corpus size
     Query("x_multimodal_framesample", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
@@ -995,7 +953,7 @@ private[graft] object Media {
     // the dedup family, riding the same batched decode scan.
     Query("x_image_dedup", (s, dir) => {
       import s.implicits._
-      val media = t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      val media = docIds(s, dir)
         .map { id =>
           val seed = id % 64
           val w = (seed % 7 + 5).toInt; val h = (seed * 3 % 5 + 5).toInt
@@ -1033,7 +991,7 @@ private[graft] object Media {
     // a raw 64-bit hash is not SQL-portable). Scan-shaped.
     Query("x_image_phash", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val ch = 1 + (id % 2).toInt * 2
           val png = dhashPng(dhashPlanted(id), ch, id)
@@ -1048,11 +1006,11 @@ private[graft] object Media {
       // perceptual hash: the planted multiplicative halves in closed
       // form — green only if PNG encode, decode, grayscale, floor-mean
       // downsample and gradient walk reproduce every bit
-      """SELECT doc_id,
+      s"""SELECT doc_id,
                   CAST(18 AS INTEGER) AS width, CAST(16 AS INTEGER) AS height,
                   CAST(1 + (doc_id % 2) * 2 AS INTEGER) AS channels,
-                  ((doc_id + 77777) * 2654435761) % 4294967296 AS dhash_hi,
-                  (doc_id * 2654435761) % 4294967296 AS dhash_lo
+                  ${dhashHiSql("doc_id")} AS dhash_hi,
+                  ${dhashLoSql("doc_id")} AS dhash_lo
            FROM documents ORDER BY doc_id"""),
 
     // perceptual DCT hash (pHash) — the frequency-domain complement of
@@ -1067,7 +1025,7 @@ private[graft] object Media {
     // unsigned 32-bit halves like x_image_phash. Scan-shaped.
     Query("x_image_phash_dct", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val png = graft.ext.Multimodal.encodePng(16, 16, 1 + (id % 2).toInt * 2,
             (x, y, _) => {
@@ -1161,21 +1119,19 @@ private[graft] object Media {
       // near-dup pairs: brute-force Hamming over the planted-bit
       // formula (base hash vs one-bit-flipped twin), thresholded at the
       // band join's pigeonhole radius
-      """WITH imgs AS (
-             SELECT doc_id AS id,
-                    ((doc_id + 77777) * 2654435761) % 4294967296 AS hi,
-                    (doc_id * 2654435761) % 4294967296 AS lo
+      s"""WITH imgs AS (
+             SELECT doc_id AS id, ${dhashHiSql("doc_id")} AS hi, ${dhashLoSql("doc_id")} AS lo
              FROM documents WHERE doc_id % 4 = 0
              UNION ALL
              SELECT doc_id + 1000000,
                     CASE WHEN doc_id % 64 >= 32
-                         THEN xor(((doc_id + 77777) * 2654435761) % 4294967296,
+                         THEN xor(${dhashHiSql("doc_id")},
                                   CAST(1 AS BIGINT) << CAST(doc_id % 64 - 32 AS INTEGER))
-                         ELSE ((doc_id + 77777) * 2654435761) % 4294967296 END,
+                         ELSE ${dhashHiSql("doc_id")} END,
                     CASE WHEN doc_id % 64 < 32
-                         THEN xor((doc_id * 2654435761) % 4294967296,
+                         THEN xor(${dhashLoSql("doc_id")},
                                   CAST(1 AS BIGINT) << CAST(doc_id % 64 AS INTEGER))
-                         ELSE (doc_id * 2654435761) % 4294967296 END
+                         ELSE ${dhashLoSql("doc_id")} END
              FROM documents WHERE doc_id % 4 = 0)
            SELECT a.id AS doc_a, b.id AS doc_b,
                   CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) AS INTEGER) AS hamming
@@ -1190,7 +1146,7 @@ private[graft] object Media {
     // resizePlan (the metadata half) to actual pixels.
     Query("x_multimodal_resize", (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+      docIds(s, dir)
         .map { id =>
           val w = (id % 9 + 8).toInt; val h = (id * 3 % 7 + 8).toInt
           val png = graft.ext.Multimodal.encodePng(w, h, 3,

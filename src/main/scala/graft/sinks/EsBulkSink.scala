@@ -38,24 +38,12 @@ import scala.util.control.NonFatal
   * from one file footer read on the driver, not from Spark's one-task
   * schema-inference job, so a streaming micro-batch's upsert runs its one
   * write and no other job.
+  *
+  * K4 (bulk-load index tuning: replicas 0, refresh 30 s,
+  * `data-s3-elastic-transfer.py:23-43`) maps to connector write options in
+  * production; the emulated index has no server to tune.
   */
 object EsBulkSink {
-
-  /** K4 parity: the reference tunes the index for bulk load — replicas 0,
-    * refresh 30 s (`data-s3-elastic-transfer.py:23-43`) — and bounds batch
-    * size/retries (`:19-21`). With the elasticsearch-spark connector these
-    * are options on the write; the emulated sink has no server to tune, so
-    * this map documents the production mapping and feeds the retry/batch
-    * parameters used by [[withRetry]] and Batching.foreachBulk.
-    */
-  val bulkLoadSettings: Map[String, String] = Map(
-    "es.index.number_of_replicas" -> "0",   // replicas=0 during load
-    "es.index.refresh_interval" -> "30s",   // refresh_interval=30s
-    "es.batch.size.entries" -> "50000",     // BATCH_SIZE
-    "es.batch.write.retry.count" -> "3",    // MAX_RETRIES
-    "es.batch.write.retry.wait" -> "20s",   // linear backoff base
-    "es.http.timeout" -> "120s"             // bulk request timeout
-  )
 
   /** F3: row → JSON document, one string column `doc`, plus the bulk action
     * metadata line. `to_json(struct(...))` is codegen'd — no per-row

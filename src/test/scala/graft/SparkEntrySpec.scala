@@ -36,6 +36,8 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty, s"queries with no oracleSql at all: $rowsOnly")
     val sentinels = SparkEntry.oracleSql.filter(_._2.contains("no_oracle")).keySet
     assert(sentinels === Set("x_minhash_lsh", "x_simhash_pairs", "x_ann_lsh", "x_ann_ivf"))
+    // gated_by.json is written in the 4-entry map's insertion order
+    assert(SparkEntry.gatedBy.keys.toSeq === Seq("x_ann_lsh", "x_ann_ivf", "x_minhash_lsh", "x_simhash_pairs"))
     sentinels.foreach { n =>
       assert(SparkEntry.oracleSql(n).contains(SparkEntry.gatedBy(n).takeWhile(_ != ':')),
         s"$n's sentinel must name its gate query")

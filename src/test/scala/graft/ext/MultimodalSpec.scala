@@ -125,12 +125,4 @@ class MultimodalSpec extends AnyFunSuite {
     // too small for an 8x8 grid -> None off the byte path
     assert(Multimodal.pHashDct64(Multimodal.encodePng(7, 8, 1, (x, y, _) => x + y)) === None)
   }
-
-  test("sampleFrames emits every stride-th frame index") {
-    import spark.implicits._
-    val df = Seq((1L, 10), (2L, 1)).toDF("id", "n_frames")
-    val frames = Multimodal.sampleFrames(df, "id", "n_frames", stride = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    assert(frames.toSet === Set((1L, 0), (1L, 4), (1L, 8), (2L, 0)))
-  }
 }
