@@ -2,6 +2,7 @@ package graft
 package queries
 
 import graft.LocalFs.deleteRecursively
+import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,6 +95,17 @@ private[graft] object Helpers {
 
   /** The oracle side of `TextFunctions.tokens`. */
   val toksE = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
+
+  /** The oracle side of `TextFunctions.stopwords`, as a DuckDB list literal. */
+  val stopList = TF.stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+
+  /** Per-row quality score over `text` — identical formula to
+    * TextFunctions.qualityScore (incl. the per-row round to 4 decimals).
+    */
+  def qualityE: String =
+    s"""round((CASE WHEN len($toksE) = 0 THEN 0.0
+          ELSE CAST(len(list_filter($toksE, t -> list_contains($stopList, t))) AS DOUBLE) / len($toksE) END) * 0.5
+          + CAST(least(len($toksE), 200) AS DOUBLE) / 400.0, 4)"""
 
   /** The synthetic link graph over the documents: node = `doc_id`
     * (contiguous 0..N-1 in the testdata), edges doc → (doc·m + m) mod N for
