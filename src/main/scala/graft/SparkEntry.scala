@@ -2,7 +2,7 @@ package graft
 
 import graft.ext.{Decontaminate, Dedup, LinkRank, LmScore, Mixture, Packing, PQ, Scrub, Similarity, Sketches}
 import graft.functions.{TextFunctions => TF}
-import graft.functions.Quant.{f4, f6, f6d, f9, f9d}
+import graft.functions.Quant.{f4, f6, f9, f9d}
 import graft.ops.Batching
 import graft.ops.Windows.constKey
 import graft.queries.{Crawl, Media, Pipeline, Query, Statistics}
@@ -16,15 +16,20 @@ import org.apache.spark.sql.functions._
   * implemented operator from SURVEY.md §2 and per north-star extension,
   * its Spark build, DuckDB oracle SQL and (approximate rows only) gate
   * side by side. `queries`, `oracleSql` and `gatedBy` are the driver's
-  * views over it. A family file under `graft/queries` holds its own list:
-  * `Pipeline` the reference pipeline (§2.1–§2.9), `Crawl` the
-  * crawl/archive ingest queries (WARC/WAT/WET, CDX, HTTP, PDF, HTML,
-  * charsets, robots, sitemaps, URLs and their t27–t29 stream twins),
-  * `Media` the image/audio/video queries. The queries not yet split out
-  * by family are [[remaining]], below the oracle fragments they share.
-  * The synthetic fixtures several families build on (link graph, planted
-  * near-dup corpus, 3-shingle pairs, type×day grid) live in
-  * [[graft.queries.Helpers]], each Spark builder beside its DuckDB twin.
+  * views over it. Four family files under `graft/queries` hold their own
+  * lists: `Pipeline.scala` the reference pipeline (§2.1–§2.9),
+  * `Crawl.scala` the crawl/archive ingest queries (WARC/WAT/WET, CDX,
+  * HTTP, PDF, HTML, charsets, robots, sitemaps, URLs and their t27–t29
+  * stream twins), `Media.scala` the image/audio/video queries and
+  * `Statistics.scala` the statistics/ML queries (tests, effect
+  * estimators, forecasts and series diagnostics, model fits and
+  * evaluation, distributions, sampling and privacy, clustering and
+  * projections). The queries not yet split out by family are
+  * [[remaining]], below the oracle fragments they share. The synthetic
+  * fixtures several families build on (link graph, planted near-dup
+  * corpus, 3-shingle pairs, type×day grid, view→click→purchase funnel)
+  * live in [[graft.queries.Helpers]], each Spark builder beside its
+  * DuckDB twin.
   *
   * Oracle-parity conventions (driver hash-compares values after sorting
   * columns by name):
@@ -115,6 +120,34 @@ object SparkEntry {
     val w = Window.partitionBy(col("query_id")).orderBy(col("sdec").desc, col("doc_id"))
     perDoc.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
   }
+
+  /** Each cluster's representative: joins `clusters(id, cluster_id)` to
+    * the members' `q(id, quality)` and keeps per cluster its size
+    * `n_docs`, its best quality and the least id holding it:
+    * (cluster_id, n_docs, keep_id, best_quality) by cluster_id.
+    */
+  private def keepBest(clusters: DataFrame, q: DataFrame): DataFrame = {
+    val cq = clusters.join(q, "id")
+    val best = cq.groupBy("cluster_id")
+      .agg(count(lit(1)).as("n_docs"), max(col("quality")).as("best_quality"))
+    cq.join(best, "cluster_id")
+      .filter(col("quality") === col("best_quality"))
+      .groupBy("cluster_id", "n_docs", "best_quality")
+      .agg(min(col("id")).as("keep_id"))
+      .select("cluster_id", "n_docs", "keep_id", "best_quality")
+      .orderBy("cluster_id")
+  }
+
+  /** The oracle side of [[keepBest]] over CTEs `cl(id, cluster_id)` and
+    * `q(id, quality)`: CTEs `cq` and `best`, then the final SELECT.
+    */
+  private val keepBestSql =
+    """cq AS (SELECT cl.cluster_id, cl.id, q.quality FROM cl JOIN q USING (id)),
+                best AS (SELECT cluster_id, count(*) AS n_docs, max(quality) AS best_quality
+                         FROM cq GROUP BY 1)
+           SELECT b.cluster_id, b.n_docs, min(cq.id) AS keep_id, b.best_quality
+           FROM cq JOIN best b USING (cluster_id) WHERE cq.quality = b.best_quality
+           GROUP BY b.cluster_id, b.n_docs, b.best_quality ORDER BY b.cluster_id"""
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -1396,9 +1429,7 @@ object SparkEntry {
                      ELSE CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text) END, 4) AS punct_ratio,
                    round(CASE WHEN len($toksE) = 0 THEN 0.0
                      ELSE CAST(len(list_filter($toksE, t -> list_contains($stopList, t))) AS DOUBLE) / len($toksE) END, 4) AS stop_ratio,
-                   round((CASE WHEN len($toksE) = 0 THEN 0.0
-                     ELSE CAST(len(list_filter($toksE, t -> list_contains($stopList, t))) AS DOUBLE) / len($toksE) END) * 0.5
-                     + CAST(least(len($toksE), 200) AS DOUBLE) / 400.0, 4) AS quality
+                   $qualityE AS quality
             FROM documents ORDER BY doc_id"""),
 
     // SKYLINE (Pareto-front) operator — the multi-objective selection
@@ -1804,15 +1835,7 @@ object SparkEntry {
         Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.01),
         "doc_a", "doc_b")
       val q = docs.select(col("doc_id").as("id"), TF.qualityScore(col("text")).as("quality"))
-      val cq = clusters.join(q, "id")
-      val best = cq.groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_docs"), max(col("quality")).as("best_quality"))
-      cq.join(best, "cluster_id")
-        .filter(col("quality") === col("best_quality"))
-        .groupBy("cluster_id", "n_docs", "best_quality")
-        .agg(min(col("id")).as("keep_id"))
-        .select("cluster_id", "n_docs", "keep_id", "best_quality")
-        .orderBy("cluster_id")
+      keepBest(clusters, q)
     },
       s"""WITH RECURSIVE ${shinglePairsSql("documents WHERE doc_id % 4 = 0")},
                  pairs AS (
@@ -1825,17 +1848,8 @@ object SparkEntry {
                    UNION
                    SELECT u.a, r.b FROM und u JOIN reach r ON u.b = r.a),
                  cl AS (SELECT a AS id, min(b) AS cluster_id FROM reach GROUP BY a),
-                 q AS (SELECT doc_id AS id,
-                         round((CASE WHEN len(toks) = 0 THEN 0.0
-                           ELSE CAST(len(list_filter(toks, t -> list_contains($stopList, t))) AS DOUBLE) / len(toks) END) * 0.5
-                           + CAST(least(len(toks), 200) AS DOUBLE) / 400.0, 4) AS quality
-                       FROM d),
-                 cq AS (SELECT cl.cluster_id, cl.id, q.quality FROM cl JOIN q USING (id)),
-                 b AS (SELECT cluster_id, count(*) AS n_docs, max(quality) AS best_quality
-                       FROM cq GROUP BY 1)
-            SELECT b.cluster_id AS cluster_id, n_docs, min(cq.id) AS keep_id, best_quality
-            FROM cq JOIN b ON cq.cluster_id = b.cluster_id AND cq.quality = b.best_quality
-            GROUP BY b.cluster_id, n_docs, best_quality ORDER BY b.cluster_id"""),
+                 q AS (SELECT doc_id AS id, $qualityE AS quality FROM documents WHERE doc_id % 4 = 0),
+                 $keepBestSql"""),
 
     // SemDeDup-style semantic dedup, composed end-to-end: projection-grid
     // candidate pairs (Dedup.semanticGridPairs — 9·|corpus| probe rows
@@ -1850,15 +1864,7 @@ object SparkEntry {
       val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
       val q = t(s, dir, "documents")
         .select(col("doc_id").as("id"), TF.qualityScore(col("text")).as("quality"))
-      val cq = clusters.join(q, "id")
-      val best = cq.groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_docs"), max(col("quality")).as("best_quality"))
-      cq.join(best, "cluster_id")
-        .filter(col("quality") === col("best_quality"))
-        .groupBy("cluster_id", "n_docs", "best_quality")
-        .agg(min(col("id")).as("keep_id"))
-        .select("cluster_id", "n_docs", "keep_id", "best_quality")
-        .orderBy("cluster_id")
+      keepBest(clusters, q)
     },
       s"""WITH RECURSIVE e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                       FROM embeddings),
@@ -1879,12 +1885,7 @@ object SparkEntry {
                   SELECT u.a, r.b FROM und u JOIN reach r ON u.b = r.a),
                 cl AS (SELECT a AS id, min(b) AS cluster_id FROM reach GROUP BY a),
                 q AS (SELECT doc_id AS id, $qualityE AS quality FROM documents),
-                cq AS (SELECT cl.cluster_id, cl.id, q.quality FROM cl JOIN q USING (id)),
-                best AS (SELECT cluster_id, count(*) AS n_docs, max(quality) AS best_quality
-                         FROM cq GROUP BY 1)
-           SELECT b.cluster_id, b.n_docs, min(cq.id) AS keep_id, b.best_quality
-           FROM cq JOIN best b USING (cluster_id) WHERE cq.quality = b.best_quality
-           GROUP BY b.cluster_id, b.n_docs, b.best_quality ORDER BY b.cluster_id"""),
+                $keepBestSql"""),
 
     // DBSCAN over a PLANTED density corpus (graft.ext.Dbscan): every
     // 4th base vector gets three ±0.06 single-dim perturbed copies (a
@@ -4396,18 +4397,7 @@ object SparkEntry {
     // propagate exactly like the oracle's left joins (no-click ⇒ tc null
     // ⇒ every purchase fails the tc predicate ⇒ tp null).
     Query("x_event_funnel", (s, dir) => {
-      val e = events(s, dir).select(col("day"), col("user_id"),
-        col("event_type"), unix_millis(col("ts")).as("ms"))
-      val hourMs = lit(3600000L)
-      e.groupBy("day", "user_id").agg(
-          min(when(col("event_type") === "view", col("ms"))).as("tv"),
-          collect_list(when(col("event_type") === "click", col("ms"))).as("cl"),
-          collect_list(when(col("event_type") === "purchase", col("ms"))).as("pl"))
-        .filter(col("tv").isNotNull)
-        .withColumn("tc", array_min(filter(col("cl"),
-          c => c > col("tv") && c - col("tv") <= hourMs)))
-        .withColumn("tp", array_min(filter(col("pl"),
-          p => p > col("tc") && p - col("tc") <= hourMs)))
+      funnelSteps(funnelFirsts(s, dir), lit(3600000L))
         .groupBy("day").agg(
           count(lit(1)).as("n_view_users"),
           sum(when(col("tc").isNotNull, 1L).otherwise(0L)).as("n_clicked"),
@@ -4417,17 +4407,7 @@ object SparkEntry {
         .orderBy("day")
     },
       // funnel: identical three-stage CTE chain on integer epoch-ms
-      s"""WITH e AS (SELECT $dayE AS day, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-                 v AS (SELECT day, user_id, min(ms) AS tv FROM e
-                       WHERE event_type = 'view' GROUP BY 1, 2),
-                 c AS (SELECT e.day, e.user_id, min(e.ms) AS tc
-                       FROM e JOIN v ON e.day = v.day AND e.user_id = v.user_id
-                       WHERE e.event_type = 'click' AND e.ms > v.tv AND e.ms - v.tv <= 3600000
-                       GROUP BY 1, 2),
-                 p AS (SELECT e.day, e.user_id, min(e.ms) AS tp
-                       FROM e JOIN c ON e.day = c.day AND e.user_id = c.user_id
-                       WHERE e.event_type = 'purchase' AND e.ms > c.tc AND e.ms - c.tc <= 3600000
-                       GROUP BY 1, 2)
+      s"""WITH $funnelStepsSql
            SELECT v.day, count(*) AS n_view_users,
                   CAST(sum(CASE WHEN c.tc IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_clicked,
                   CAST(sum(CASE WHEN p.tp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_converted,
@@ -4441,18 +4421,7 @@ object SparkEntry {
     // percentiles of view→click and click→purchase gaps per day —
     // integer epoch-ms differences through the a12 percentile parity.
     Query("x_time_to_convert", (s, dir) => {
-      val e = events(s, dir).select(col("day"), col("user_id"),
-        col("event_type"), unix_millis(col("ts")).as("ms"))
-      val hourMs = lit(3600000L)
-      e.groupBy("day", "user_id").agg(
-          min(when(col("event_type") === "view", col("ms"))).as("tv"),
-          collect_list(when(col("event_type") === "click", col("ms"))).as("cl"),
-          collect_list(when(col("event_type") === "purchase", col("ms"))).as("pl"))
-        .filter(col("tv").isNotNull)
-        .withColumn("tc", array_min(filter(col("cl"),
-          c => c > col("tv") && c - col("tv") <= hourMs)))
-        .withColumn("tp", array_min(filter(col("pl"),
-          p => p > col("tc") && p - col("tc") <= hourMs)))
+      funnelSteps(funnelFirsts(s, dir), lit(3600000L))
         .filter(col("tp").isNotNull)
         .groupBy("day").agg(
           count(lit(1)).as("n_converted"),
@@ -4463,17 +4432,7 @@ object SparkEntry {
     },
       // conversion latency: the funnel chain restricted to converters,
       // exact interpolated gap percentiles
-      s"""WITH e AS (SELECT $dayE AS day, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-                 v AS (SELECT day, user_id, min(ms) AS tv FROM e
-                       WHERE event_type = 'view' GROUP BY 1, 2),
-                 c AS (SELECT e.day, e.user_id, min(e.ms) AS tc
-                       FROM e JOIN v ON e.day = v.day AND e.user_id = v.user_id
-                       WHERE e.event_type = 'click' AND e.ms > v.tv AND e.ms - v.tv <= 3600000
-                       GROUP BY 1, 2),
-                 p AS (SELECT e.day, e.user_id, min(e.ms) AS tp
-                       FROM e JOIN c ON e.day = c.day AND e.user_id = c.user_id
-                       WHERE e.event_type = 'purchase' AND e.ms > c.tc AND e.ms - c.tc <= 3600000
-                       GROUP BY 1, 2),
+      s"""WITH $funnelStepsSql,
                  f AS (SELECT v.day, v.tv, c.tc, p.tp
                        FROM v JOIN c ON v.day = c.day AND v.user_id = c.user_id
                               JOIN p ON v.day = p.day AND v.user_id = p.user_id)
@@ -4531,18 +4490,8 @@ object SparkEntry {
     // corpus (at 100 TB the scan+shuffle IS the cost; the sweep is
     // per-group array math).
     Query("x_funnel_sweep", (s, dir) => {
-      val e = events(s, dir).select(col("day"), col("user_id"),
-        col("event_type"), unix_millis(col("ts")).as("ms"))
-      val base = e.groupBy("day", "user_id").agg(
-          min(when(col("event_type") === "view", col("ms"))).as("tv"),
-          collect_list(when(col("event_type") === "click", col("ms"))).as("cl"),
-          collect_list(when(col("event_type") === "purchase", col("ms"))).as("pl"))
-        .filter(col("tv").isNotNull)
-      base.withColumn("w", explode(array(lit(1800000L), lit(3600000L), lit(7200000L))))
-        .withColumn("tc", array_min(filter(col("cl"),
-          c => c > col("tv") && c - col("tv") <= col("w"))))
-        .withColumn("tp", array_min(filter(col("pl"),
-          p => p > col("tc") && p - col("tc") <= col("w"))))
+      funnelSteps(funnelFirsts(s, dir)
+          .withColumn("w", explode(array(lit(1800000L), lit(3600000L), lit(7200000L)))), col("w"))
         .groupBy((col("w") / lit(60000L)).cast("int").as("w_min"), col("day"))
         .agg(
           count(lit(1)).as("n_view_users"),

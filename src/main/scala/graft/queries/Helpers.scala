@@ -238,6 +238,70 @@ private[graft] object Helpers {
                   count(*) * 10 AS n_true, TRUE AS recall_ok
            FROM embeddings WHERE vec_id < 100 GROUP BY 1 ORDER BY 1"""
 
+  /** The per-(day, user) view→click→purchase funnel over `events`: per
+    * (day, user) with a view, the first view `tv`, the click times `cl`
+    * and the purchase times `pl` (epoch ms).
+    */
+  def funnelFirsts(s: SparkSession, dir: String): DataFrame =
+    events(s, dir).select(col("day"), col("user_id"),
+        col("event_type"), unix_millis(col("ts")).as("ms"))
+      .groupBy("day", "user_id").agg(
+        min(when(col("event_type") === "view", col("ms"))).as("tv"),
+        collect_list(when(col("event_type") === "click", col("ms"))).as("cl"),
+        collect_list(when(col("event_type") === "purchase", col("ms"))).as("pl"))
+      .filter(col("tv").isNotNull)
+
+  /** [[funnelFirsts]] plus its dependent steps within a `window`-ms step
+    * window: `tc`, the first click after `tv` within the window, and
+    * `tp`, the first purchase after `tc` within the window (null where a
+    * step is missing: no click ⇒ no purchase).
+    */
+  def funnelSteps(firsts: DataFrame, window: Column): DataFrame =
+    firsts
+      .withColumn("tc", array_min(filter(col("cl"),
+        c => c > col("tv") && c - col("tv") <= window)))
+      .withColumn("tp", array_min(filter(col("pl"),
+        p => p > col("tc") && p - col("tc") <= window)))
+
+  /** The oracle side of [[funnelSteps]] at a 1 h window: CTEs `e`,
+    * `v(day, user_id, tv)`, `c(day, user_id, tc)` and `p(day, user_id,
+    * tp)`, shared by x_event_funnel, x_time_to_convert and
+    * t19_stream_funnel.
+    */
+  val funnelStepsSql =
+    s"""e AS (SELECT $dayE AS day, user_id, event_type, epoch_ms(ts) AS ms FROM events),
+                 v AS (SELECT day, user_id, min(ms) AS tv FROM e
+                       WHERE event_type = 'view' GROUP BY 1, 2),
+                 c AS (SELECT e.day, e.user_id, min(e.ms) AS tc
+                       FROM e JOIN v ON e.day = v.day AND e.user_id = v.user_id
+                       WHERE e.event_type = 'click' AND e.ms > v.tv AND e.ms - v.tv <= 3600000
+                       GROUP BY 1, 2),
+                 p AS (SELECT e.day, e.user_id, min(e.ms) AS tp
+                       FROM e JOIN c ON e.day = c.day AND e.user_id = c.user_id
+                       WHERE e.event_type = 'purchase' AND e.ms > c.tc AND e.ms - c.tc <= 3600000
+                       GROUP BY 1, 2)"""
+
+  /** The oracle side of the event-type drift build (x_dist_drift and
+    * `EventStream.driftMonitor`, t18_stream_drift): CTEs `c`, `g`, `f`
+    * (the zero-filled day × event_type grid), `n`, `p` (each day's
+    * add-one smoothed type shares) and `pq(day, event_type, p, q)`, q
+    * the previous day's share.
+    */
+  val driftPairsSql =
+    s"""c AS (SELECT $dayE AS day, event_type, count(*) AS c FROM events GROUP BY 1, 2),
+                 g AS (SELECT d.day, t.event_type
+                       FROM (SELECT DISTINCT day FROM c) d
+                       CROSS JOIN (SELECT DISTINCT event_type FROM c) t),
+                 f AS (SELECT g.day, g.event_type, coalesce(c.c, 0) AS c
+                       FROM g LEFT JOIN c USING (day, event_type)),
+                 n AS (SELECT day, sum(c) AS n, count(*) AS k FROM f GROUP BY day),
+                 p AS (SELECT f.day, f.event_type, (f.c + 1.0) / (n.n + n.k) AS p
+                       FROM f JOIN n USING (day)),
+                 pq AS (SELECT p.day, p.event_type, p.p, q.p AS q
+                        FROM p JOIN (SELECT strftime(CAST(day AS DATE) + 1, '%Y-%m-%d') AS day,
+                                            event_type, p FROM p) q
+                          USING (day, event_type))"""
+
   // x_dp_counts / t22_stream_dp: the identical deterministic release
   val dpCountsSql =
     s"""WITH c AS (SELECT $dayE AS day, event_type, count(*) AS c FROM events GROUP BY 1, 2),

@@ -1757,19 +1757,7 @@ private[graft] object Pipeline {
       // streaming drift = the batch drift rows for every day whose window
       // the watermark can seal: day end (+1 day midnight) at or below
       // max event time minus the 1 h watermark delay
-      s"""WITH c AS (SELECT $dayE AS day, event_type, count(*) AS c FROM events GROUP BY 1, 2),
-                 g AS (SELECT d.day, t.event_type
-                       FROM (SELECT DISTINCT day FROM c) d
-                       CROSS JOIN (SELECT DISTINCT event_type FROM c) t),
-                 f AS (SELECT g.day, g.event_type, coalesce(c.c, 0) AS c
-                       FROM g LEFT JOIN c USING (day, event_type)),
-                 n AS (SELECT day, sum(c) AS n, count(*) AS k FROM f GROUP BY day),
-                 p AS (SELECT f.day, f.event_type, (f.c + 1.0) / (n.n + n.k) AS p
-                       FROM f JOIN n USING (day)),
-                 pq AS (SELECT p.day, p.event_type, p.p, q.p AS q
-                        FROM p JOIN (SELECT strftime(CAST(day AS DATE) + 1, '%Y-%m-%d') AS day,
-                                            event_type, p FROM p) q
-                          USING (day, event_type)),
+      s"""WITH $driftPairsSql,
                  d AS (SELECT day,
                          CAST(round(sum(CAST(round(p * ln(p / q), 6) AS DECIMAL(18,6))), 4) AS DOUBLE) AS kl,
                          CAST(round(sum(CAST(round(abs(p - q) * 0.5, 6) AS DECIMAL(18,6))), 4) AS DOUBLE) AS tv,
@@ -1800,17 +1788,7 @@ private[graft] object Pipeline {
     },
       // streaming funnel = the batch funnel rows for every day the
       // watermark can seal (t18 cutoff)
-      s"""WITH e AS (SELECT $dayE AS day, user_id, event_type, epoch_ms(ts) AS ms FROM events),
-                 v AS (SELECT day, user_id, min(ms) AS tv FROM e
-                       WHERE event_type = 'view' GROUP BY 1, 2),
-                 c AS (SELECT e.day, e.user_id, min(e.ms) AS tc
-                       FROM e JOIN v ON e.day = v.day AND e.user_id = v.user_id
-                       WHERE e.event_type = 'click' AND e.ms > v.tv AND e.ms - v.tv <= 3600000
-                       GROUP BY 1, 2),
-                 p AS (SELECT e.day, e.user_id, min(e.ms) AS tp
-                       FROM e JOIN c ON e.day = c.day AND e.user_id = c.user_id
-                       WHERE e.event_type = 'purchase' AND e.ms > c.tc AND e.ms - c.tc <= 3600000
-                       GROUP BY 1, 2)
+      s"""WITH $funnelStepsSql
            SELECT v.day, count(*) AS n_view_users,
                   CAST(sum(CASE WHEN c.tc IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_clicked,
                   CAST(sum(CASE WHEN p.tp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_converted,

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object Statistics {
   /** PCA fit shared by x_pca_project and x_pca_heatmap — same rationale
-    * as [[bpeCache]]: the fit is deterministic in the dataset, bounded
+    * as SparkEntry's BPE cache: the fit is deterministic in the dataset, bounded
     * driver state, and a production pipeline fits once.
     */
   private val pcaCache =
@@ -59,19 +59,8 @@ private[graft] object Statistics {
               floor((c.b1 + (a.h00 * a.g1 - a.h01 * a.g0) / (a.h00 * a.h11 - a.h01 * a.h01)) * 1e6 + 0.5) / 1e6 AS b1
             FROM ${pfx}g$i a CROSS JOIN $pfx${i - 1} c)"""
   }.mkString(",\n")
-  private val logitIters = (1 to 3).map { i =>
-    s"""lg$i AS (SELECT
-              CAST(sum(CAST(floor(CAST(h.f AS DOUBLE) * (CAST(h.y AS DOUBLE) - $logitP) * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS g0,
-              CAST(sum(CAST(floor(CAST(h.f AS DOUBLE) * (CAST(h.y AS DOUBLE) - $logitP) * CAST(h.x AS DOUBLE) * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS g1,
-              CAST(sum(CAST(floor(CAST(h.f AS DOUBLE) * ($logitP * (1.0 - $logitP)) * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS h00,
-              CAST(sum(CAST(floor(CAST(h.f AS DOUBLE) * ($logitP * (1.0 - $logitP)) * CAST(h.x AS DOUBLE) * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS h01,
-              CAST(sum(CAST(floor(CAST(h.f AS DOUBLE) * ($logitP * (1.0 - $logitP)) * CAST(h.x AS DOUBLE) * CAST(h.x AS DOUBLE) * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS h11
-            FROM h CROSS JOIN cf${i - 1} c),
-          cf$i AS (SELECT
-              floor((c.b0 + (a.h11 * a.g0 - a.h01 * a.g1) / (a.h00 * a.h11 - a.h01 * a.h01)) * 1e6 + 0.5) / 1e6 AS b0,
-              floor((c.b1 + (a.h00 * a.g1 - a.h01 * a.g0) / (a.h00 * a.h11 - a.h01 * a.h01)) * 1e6 + 0.5) / 1e6 AS b1
-            FROM lg$i a CROSS JOIN cf${i - 1} c)"""
-  }.mkString(",\n")
+  // the single fit over `h`, coefficients cf0 … cf3
+  private val logitIters = logitChain("h", "cf")
   // x_gmm_em: 4 unrolled EM stages over the value histogram grid —
   // responsibility (one exp/point, floor-6), decimal-weighted moments,
   // new means, tied variance from the new means
@@ -184,6 +173,186 @@ private[graft] object Statistics {
        $tail"""
   }
 
+  /** Per user: `xName` = the user's events, then the `more` aggregates,
+    * then the purchase-heavy label `y` (as `yType`): 1 iff purchases are
+    * at least a fifth of the user's events, the integer test
+    * 5·purchases ≥ events (every user purchases something in this
+    * corpus, so presence alone is degenerate).
+    */
+  private[graft] def purchaseLabel(s: SparkSession, dir: String, xName: String = "x",
+      more: Seq[Column] = Nil, yType: String = "int"): DataFrame =
+    events(s, dir).groupBy("user_id").agg(count(lit(1)).as(xName),
+      more :+ (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
+        .cast(yType).as("y"): _*)
+
+  /** The oracle side of [[purchaseLabel]]: CTE `per(user_id, xName, more…, y)`. */
+  private def purchaseLabelSql(xName: String = "x", more: Seq[String] = Nil): String =
+    s"""per AS (SELECT user_id, count(*) AS $xName,${more.map(m => s"\n                         $m,").mkString}
+                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
+                              THEN 1 ELSE 0 END AS y
+                       FROM events GROUP BY 1)"""
+
+  /** The histogram lower median of `df`'s column `c`: one row, `med` —
+    * the least value whose cumulative count reaches half the rows.
+    */
+  private def lowerMedian(df: DataFrame, c: String): DataFrame = {
+    val h = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("f"))
+    val wc = Window.partitionBy(constKey(col("v"))).orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    h.withColumn("cum", sum(col("f")).over(wc))
+      .withColumn("n", sum(col("f")).over(Window.partitionBy(constKey(col("f")))))
+      .filter(lit(2L) * col("cum") >= col("n"))
+      .agg(min(col("v")).as("med"))
+  }
+
+  /** The oracle side of [[lowerMedian]] over `per`'s column `c`: CTEs
+    * `h<tag>(v, f)`, `c<tag>(v, cum, n)` and `m<tag>(med_<c>)`.
+    */
+  private def lowerMedianSql(tag: String, c: String): String =
+    s"""h$tag AS (SELECT $c AS v, count(*) AS f FROM per GROUP BY 1),
+                c$tag AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+                         CAST(sum(f) OVER () AS BIGINT) AS n FROM h$tag),
+                m$tag AS (SELECT min(v) AS med_$c FROM c$tag WHERE 2 * cum >= n)"""
+
+  /** The urgent-order rate model's holdout: orders ⋈ customer with `y` =
+    * 1 for a 1-URGENT order, the per-(nation, segment) urgent counts `u`
+    * of `tot` orders taken from the even order keys, and the odd-key
+    * orders joined to their cell's counts (the 125-cell table is
+    * broadcast): (c_nationkey, c_mktsegment, o_orderkey, y, u, tot).
+    * [[urgentP]] is the rate each holdout order is scored with.
+    */
+  private[graft] def urgentHoldout(s: SparkSession, dir: String): DataFrame = {
+    val o = t(s, dir, "orders").join(
+      t(s, dir, "customer").select(col("c_custkey").as("o_custkey"),
+        col("c_nationkey"), col("c_mktsegment")), "o_custkey")
+      .select(col("o_orderkey"), col("c_nationkey"), col("c_mktsegment"),
+        (col("o_orderpriority") === "1-URGENT").cast("long").as("y"))
+    val rates = o.filter(col("o_orderkey") % 2 === 0)
+      .groupBy("c_nationkey", "c_mktsegment")
+      .agg(sum(col("y")).as("u"), count(lit(1)).as("tot"))
+    o.filter(col("o_orderkey") % 2 === 1)
+      .join(broadcast(rates), Seq("c_nationkey", "c_mktsegment"))
+  }
+
+  /** The predicted urgent rate of an [[urgentHoldout]] row. */
+  private[graft] def urgentP: Column = col("u").cast("double") / col("tot").cast("double")
+
+  /** The oracle side of [[urgentHoldout]]: CTEs `o`, `rates` and
+    * `ho(y, p)`, p the predicted rate of each odd-key order.
+    */
+  private val urgentHoldoutSql =
+    """o AS (SELECT o_orderkey, c_nationkey, c_mktsegment,
+                             CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y
+                      FROM orders JOIN customer ON o_custkey = c_custkey),
+                rates AS (SELECT c_nationkey, c_mktsegment,
+                                 CAST(sum(y) AS BIGINT) AS u, count(*) AS tot
+                          FROM o WHERE o_orderkey % 2 = 0 GROUP BY 1, 2),
+                ho AS (SELECT y, CAST(u AS DOUBLE) / CAST(tot AS DOUBLE) AS p
+                       FROM o JOIN rates USING (c_nationkey, c_mktsegment)
+                       WHERE o_orderkey % 2 = 1)"""
+
+  /** Each event type's daily series over the zero-filled type×day grid
+    * as deviations from its mean: `x(event_type, nd, d, dev)`, nd the
+    * type's day count and d the day as a date, and `den(event_type,
+    * den)`, the decimal sum of the floor-6 squared deviations.
+    */
+  private[graft] def typeDayDevs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val full = typeDayCounts(s, dir)
+    val mu = full.groupBy("event_type").agg(sum(col("c")).as("sc"), count(lit(1)).as("nd"))
+      .select(col("event_type"), col("nd"),
+        (col("sc").cast("double") / col("nd").cast("double")).as("mu"))
+    val x = full.join(broadcast(mu), "event_type")
+      .select(col("event_type"), col("nd"), to_date(col("day")).as("d"),
+        (col("c").cast("double") - col("mu")).as("dev"))
+    (x, x.groupBy("event_type").agg(sum(f6d(col("dev") * col("dev"))).as("den")))
+  }
+
+  /** The lagged autocovariance numerators over [[typeDayDevs]]' `x`: per
+    * (event_type, lag), the decimal sum of the floor-6 products
+    * dev(d)·dev(d + lag). (type, day + lag) is an equi-key: a hash join,
+    * never a filtered grid.
+    */
+  private def lagNums(x: DataFrame, lags: Seq[Int]): DataFrame = {
+    val lagged = x.select(col("event_type").as("et2"), col("d").as("d2"), col("dev").as("dev2"))
+    x.withColumn("lag", explode(array(lags.map(lit): _*)))
+      .join(lagged,
+        col("event_type") === col("et2") && col("d2") === date_add(col("d"), col("lag")))
+      .groupBy("event_type", "lag").agg(sum(f6d(col("dev") * col("dev2"))).as("num"))
+  }
+
+  /** The oracle side of [[typeDayDevs]]: [[typeDayCountsSql]] plus CTEs
+    * `mu`, `x(event_type, d, dev)` and `den(event_type, den)`.
+    */
+  private val typeDayDevsSql =
+    s"""$typeDayCountsSql,
+                 mu AS (SELECT event_type, CAST(sum(c) AS DOUBLE) / count(*) AS mu FROM f GROUP BY 1),
+                 x AS (SELECT f.event_type, CAST(f.day AS DATE) AS d, CAST(c AS DOUBLE) - mu AS dev
+                       FROM f JOIN mu USING (event_type)),
+                 den AS (SELECT event_type,
+                           sum(CAST(floor(dev * dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS den
+                         FROM x GROUP BY 1)"""
+
+  /** The oracle side of [[lagNums]]: CTE `num(event_type, lag, num)`. */
+  private def lagNumsSql(lags: Seq[Int]): String =
+    s"""num AS (SELECT a.event_type, l.lag,
+                           sum(CAST(floor(a.dev * b.dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS num
+                         FROM x a CROSS JOIN (VALUES ${lags.map(l => s"($l)").mkString(", ")}) AS l(lag)
+                         JOIN x b ON b.event_type = a.event_type AND b.d = a.d + l.lag
+                         GROUP BY 1, 2)"""
+
+  /** Each event type's daily counts with their 0-based day index:
+    * (event_type, day, c, idx).
+    */
+  private def indexedDaily(s: SparkSession, dir: String): DataFrame =
+    events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+      .withColumn("idx", row_number().over(
+        Window.partitionBy("event_type").orderBy("day")) - 1)
+
+  /** An [[indexedDaily]] series as one array per type: (event_type, a),
+    * `a` the (idx, c) structs in day order.
+    */
+  private def dailyArrays(dc: DataFrame): DataFrame =
+    dc.groupBy("event_type").agg(sort_array(collect_list(struct(col("idx"), col("c")))).as("a"))
+
+  /** The oracle side of [[indexedDaily]]: CTEs `dc(event_type, day, c)`
+    * and `ix(event_type, day, c, idx)`.
+    */
+  private val indexedDailySql =
+    s"""dc AS (SELECT event_type, $dayE AS day, count(*) AS c
+                       FROM events GROUP BY 1, 2),
+                ix AS (SELECT event_type, day, c,
+                         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS idx
+                       FROM dc)"""
+
+  /** Per event type, the count and floor-4 mean of a forecast's floor-6
+    * `abs_err` column (decimal-summed): (event_type, n_forecasts, mae).
+    */
+  private def forecastMae(errs: DataFrame): DataFrame =
+    errs.groupBy("event_type").agg(
+        count(lit(1)).as("n_forecasts"),
+        (floor(sum(col("abs_err").cast("decimal(28,6)")).cast("double")
+          / count(lit(1)).cast("double") * lit(1e4) + lit(0.5)) / lit(1e4)).as("mae"))
+      .orderBy("event_type")
+
+  /** The least-squares moments of `xy`'s floor-6 (x, y) points, each a
+    * decimal sum: n, sx, sy and, of the floor-6 products, sxy and sxx.
+    */
+  private def olsMoments(xy: DataFrame): DataFrame =
+    xy.agg(count(lit(1)).as("n"),
+      sum(col("x").cast("decimal(28,6)")).cast("double").as("sx"),
+      sum(col("y").cast("decimal(28,6)")).cast("double").as("sy"),
+      sum(f6(col("x") * col("y")).cast("decimal(28,6)")).cast("double").as("sxy"),
+      sum(f6(col("x") * col("x")).cast("decimal(28,6)")).cast("double").as("sxx"))
+
+  /** The oracle side of [[olsMoments]] over CTE `xy`: CTE `st`. */
+  private val olsMomentsSql =
+    """st AS (SELECT count(*) AS n,
+                          CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
+                          CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
+                          CAST(sum(CAST(floor(x * y * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
+                          CAST(sum(CAST(floor(x * x * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxx
+                        FROM xy)"""
+
   def queries: Seq[Query] = Seq(
     // The CCNet/fastText quality-filter training loop as ONE query:
     // train the shared IRLS classifier to separate the first ten
@@ -210,9 +379,7 @@ private[graft] object Statistics {
       // quality classifier: the x_quality_score quality expr bucketed
       // ×20, source-id label, the shared 3-stage logit chain
       s"""WITH feats AS (SELECT
-                  CAST(floor(round((CASE WHEN len($toksE) = 0 THEN 0.0
-                      ELSE CAST(len(list_filter($toksE, t -> list_contains($stopList, t))) AS DOUBLE) / len($toksE) END) * 0.5
-                    + CAST(least(len($toksE), 200) AS DOUBLE) / 400.0, 4) * 20.0) AS INTEGER) AS x,
+                  CAST(floor($qualityE * 20.0) AS INTEGER) AS x,
                   CASE WHEN CAST(regexp_extract(source, '\\d+') AS INTEGER) < 10 THEN 1 ELSE 0 END AS y
                 FROM documents),
                 h AS (SELECT x, y, count(*) AS f FROM feats GROUP BY 1, 2),
@@ -286,9 +453,7 @@ private[graft] object Statistics {
       // learning curve: four independent logitChain unrolls over the
       // mod-4 training slices, one shared eval histogram
       s"""WITH feats AS (SELECT
-                  CAST(floor(round((CASE WHEN len($toksE) = 0 THEN 0.0
-                      ELSE CAST(len(list_filter($toksE, t -> list_contains($stopList, t))) AS DOUBLE) / len($toksE) END) * 0.5
-                    + CAST(least(len($toksE), 200) AS DOUBLE) / 400.0, 4) * 20.0) AS INTEGER) AS x,
+                  CAST(floor($qualityE * 20.0) AS INTEGER) AS x,
                   CASE WHEN CAST(regexp_extract(source, '\\d+') AS INTEGER) < 10 THEN 1 ELSE 0 END AS y,
                   CAST(doc_id % 4 AS INTEGER) AS m
                 FROM documents),
@@ -332,20 +497,8 @@ private[graft] object Statistics {
     // per-classifier totals T_j are exact integers off one pass;
     // Q = (k−1)·(k·ΣT² − (ΣT)²)/(k·Σu − Σu²) is one floor-6 division.
     Query("x_cochran_q", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("tot"),
-        countDistinct(col("day")).as("days"),
-        sum(col("value").cast("decimal(18,4)")).as("vsum"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("int").as("y"))
-      def lowerMedian(df: DataFrame, c: String): DataFrame = {
-        val h = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("f"))
-        val wcm = Window.partitionBy(constKey(col("v"))).orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-        h.withColumn("cum", sum(col("f")).over(wcm))
-          .withColumn("n", sum(col("f")).over(Window.partitionBy(constKey(col("f")))))
-          .filter(lit(2L) * col("cum") >= col("n"))
-          .agg(min(col("v")).as("med"))
-      }
+      val per = purchaseLabel(s, dir, "tot", Seq(countDistinct(col("day")).as("days"),
+        sum(col("value").cast("decimal(18,4)")).as("vsum")))
       val mt = lowerMedian(per, "tot").select(col("med").as("med_tot"))
       val md = lowerMedian(per, "days").select(col("med").as("med_days"))
       val mv = lowerMedian(per, "vsum").select(col("med").as("med_vsum"))
@@ -367,27 +520,11 @@ private[graft] object Statistics {
     },
       // Cochran's Q: three median-threshold proxies, exact integer
       // T_j/u_i sums, one floor-6 division
-      s"""WITH per AS (SELECT user_id, count(*) AS tot,
-                         count(DISTINCT $dayE) AS days,
-                         sum(CAST(value AS DECIMAL(18,4))) AS vsum,
-                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                              THEN 1 ELSE 0 END AS y
-                       FROM events GROUP BY 1),
-                ht AS (SELECT tot AS v, count(*) AS f FROM per GROUP BY 1),
-                ct AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                         CAST(sum(f) OVER () AS BIGINT) AS n FROM ht),
-                mt AS (SELECT min(v) AS med_tot FROM ct WHERE 2 * cum >= n),
-                hd AS (SELECT days AS v, count(*) AS f FROM per GROUP BY 1),
-                cd AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                         CAST(sum(f) OVER () AS BIGINT) AS n FROM hd),
-                md AS (SELECT min(v) AS med_days FROM cd WHERE 2 * cum >= n),
-                hv AS (SELECT vsum AS v, count(*) AS f FROM per GROUP BY 1),
-                cv AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                         CAST(sum(f) OVER () AS BIGINT) AS n FROM hv),
-                mv AS (SELECT min(v) AS med_vsum FROM cv WHERE 2 * cum >= n),
+      s"""WITH ${purchaseLabelSql("tot", Seq(s"count(DISTINCT $dayE) AS days",
+                  "sum(CAST(value AS DECIMAL(18,4))) AS vsum"))},
+                ${lowerMedianSql("t", "tot")},
+                ${lowerMedianSql("d", "days")},
+                ${lowerMedianSql("v", "vsum")},
                 lab AS (SELECT
                           CASE WHEN (CASE WHEN tot >= med_tot THEN 1 ELSE 0 END) = y THEN 1 ELSE 0 END AS ok_a,
                           CASE WHEN (CASE WHEN days >= med_days THEN 1 ELSE 0 END) = y THEN 1 ELSE 0 END AS ok_b,
@@ -413,10 +550,7 @@ private[graft] object Statistics {
     // the SAME joint histogram the fit used, with the identical clamped
     // floor-6 sigmoid — per-cell (p−y)² and the 0.5-threshold hit flag.
     Query("x_brier", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("x"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("int").as("y"))
+      val per = purchaseLabel(s, dir)
       val (hist, coef) = graft.ext.Stats.logisticIrls(per, col("x"), col("y"), 3)
       val fD = col("f").cast("double"); val yD = col("y").cast("double")
       hist.crossJoin(broadcast(coef))
@@ -431,10 +565,7 @@ private[graft] object Statistics {
     },
       // Brier/accuracy: the same 3-stage logit chain, then per-cell
       // (p−y)² decimal sums and the 0.5-threshold hit count at cf3
-      s"""WITH per AS (SELECT user_id, count(*) AS x,
-                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                              THEN 1 ELSE 0 END AS y
-                       FROM events GROUP BY 1),
+      s"""WITH ${purchaseLabelSql()},
                 h AS (SELECT x, y, count(*) AS f FROM per GROUP BY 1, 2),
                 cf0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, CAST(0.0 AS DOUBLE) AS b1),
                 $logitIters,
@@ -458,12 +589,8 @@ private[graft] object Statistics {
     // entropies weighted by value mass. One per-user pass; each
     // feature's grid is bounded by its bucket count at any corpus size.
     Query("x_info_gain", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("x"),
-        countDistinct(col("day")).as("days"),
-        sum(dayofweek(to_date(col("day"))).isin(1, 7).cast("long")).as("w"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("int").as("y"))
+      val per = purchaseLabel(s, dir, more = Seq(countDistinct(col("day")).as("days"),
+        sum(dayofweek(to_date(col("day"))).isin(1, 7).cast("long")).as("w")))
         .withColumn("act_bucket", least(floor(col("x").cast("double") / lit(20.0)), lit(5.0)).cast("int"))
         .withColumn("day_bucket", least(col("days"), lit(10L)))
         .withColumn("wknd_bucket", floor(col("w").cast("double") * lit(10.0) / col("x").cast("double")).cast("int"))
@@ -495,12 +622,8 @@ private[graft] object Statistics {
     },
       // info gain: per-feature (value, label) grids, floor-9 −p·ln p
       // terms + decimal sums, three features unioned
-      s"""WITH per AS (SELECT user_id, count(*) AS x,
-                         count(DISTINCT $dayE) AS days,
-                         CAST(sum(CASE WHEN dayofweek(CAST($dayE AS DATE)) IN (0, 6) THEN 1 ELSE 0 END) AS BIGINT) AS w,
-                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                              THEN 1 ELSE 0 END AS y
-                       FROM events GROUP BY 1),
+      s"""WITH ${purchaseLabelSql(more = Seq(s"count(DISTINCT $dayE) AS days",
+                  s"CAST(sum(CASE WHEN dayofweek(CAST($dayE AS DATE)) IN (0, 6) THEN 1 ELSE 0 END) AS BIGINT) AS w"))},
                 fb AS (SELECT y,
                          CAST(least(floor(CAST(x AS DOUBLE) / 20.0), 5.0) AS INTEGER) AS act_bucket,
                          least(days, 10) AS day_bucket,
@@ -534,10 +657,7 @@ private[graft] object Statistics {
     // is a broadcast-coefficient map over the per-user pass; the top-20
     // is a TakeOrdered with (uncertainty, user_id) tiebreak.
     Query("x_uncertainty_sample", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("x"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("int").as("y"))
+      val per = purchaseLabel(s, dir)
       val (_, coef) = graft.ext.Stats.logisticIrls(per, col("x"), col("y"), 3)
       per.crossJoin(broadcast(coef))
         .withColumn("p", graft.ext.Stats.logisticP(col("x")))
@@ -547,10 +667,7 @@ private[graft] object Statistics {
     },
       // uncertainty sampling: the logit chain, per-user p via per aliased
       // as h against cf3, |p−0.5| ascending top-20
-      s"""WITH per AS (SELECT user_id, count(*) AS x,
-                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                              THEN 1 ELSE 0 END AS y
-                       FROM events GROUP BY 1),
+      s"""WITH ${purchaseLabelSql()},
                 h AS (SELECT x, y, count(*) AS f FROM per GROUP BY 1, 2),
                 cf0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, CAST(0.0 AS DOUBLE) AS b1),
                 $logitIters,
@@ -575,12 +692,7 @@ private[graft] object Statistics {
         count(lit(1)).as("x"),
         countDistinct(col("day")).as("days"),
         sum(col("value").cast("decimal(18,4)")).as("yv"))
-      val hd = per.groupBy(col("days").as("v")).agg(count(lit(1)).as("f"))
-      val wcm = Window.partitionBy(constKey(col("v"))).orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-      val med = hd.withColumn("cum", sum(col("f")).over(wcm))
-        .withColumn("n", sum(col("f")).over(Window.partitionBy(constKey(col("f")))))
-        .filter(lit(2L) * col("cum") >= col("n"))
-        .agg(min(col("v")).as("med_days"))
+      val med = lowerMedian(per, "days").select(col("med").as("med_days"))
       val pt = per.crossJoin(broadcast(med))
         .withColumn("treat", (col("days") >= col("med_days")).cast("int"))
       val (_, coef) = graft.ext.Stats.logisticIrls(pt, col("x"), col("treat"), 3)
@@ -619,11 +731,7 @@ private[graft] object Statistics {
                          count(DISTINCT $dayE) AS days,
                          sum(CAST(value AS DECIMAL(18,4))) AS yv
                        FROM events GROUP BY 1),
-                hd AS (SELECT days AS v, count(*) AS f FROM per GROUP BY 1),
-                cd AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                         CAST(sum(f) OVER () AS BIGINT) AS n FROM hd),
-                md AS (SELECT min(v) AS med_days FROM cd WHERE 2 * cum >= n),
+                ${lowerMedianSql("d", "days")},
                 pt AS (SELECT per.*, CASE WHEN days >= med_days THEN 1 ELSE 0 END AS treat
                        FROM per CROSS JOIN md),
                 h AS (SELECT x, treat AS y, count(*) AS f FROM pt GROUP BY 1, 2),
@@ -1016,19 +1124,7 @@ private[graft] object Statistics {
         .orderBy("day")
     },
       // drift: identical grid + smoothing + per-term round-6 decimal sums
-      s"""WITH c AS (SELECT $dayE AS day, event_type, count(*) AS c FROM events GROUP BY 1, 2),
-                 g AS (SELECT d.day, t.event_type
-                       FROM (SELECT DISTINCT day FROM c) d
-                       CROSS JOIN (SELECT DISTINCT event_type FROM c) t),
-                 f AS (SELECT g.day, g.event_type, coalesce(c.c, 0) AS c
-                       FROM g LEFT JOIN c USING (day, event_type)),
-                 n AS (SELECT day, sum(c) AS n, count(*) AS k FROM f GROUP BY day),
-                 p AS (SELECT f.day, f.event_type, (f.c + 1.0) / (n.n + n.k) AS p
-                       FROM f JOIN n USING (day)),
-                 pq AS (SELECT p.day, p.event_type, p.p, q.p AS q
-                        FROM p JOIN (SELECT strftime(CAST(day AS DATE) + 1, '%Y-%m-%d') AS day,
-                                            event_type, p FROM p) q
-                          USING (day, event_type))
+      s"""WITH $driftPairsSql
            SELECT day,
                   CAST(round(sum(CAST(round(p * ln(p / q), 6) AS DECIMAL(18,6))), 4) AS DOUBLE) AS kl,
                   CAST(round(sum(CAST(round(abs(p - q) * 0.5, 6) AS DECIMAL(18,6))), 4) AS DOUBLE) AS tv,
@@ -1770,13 +1866,8 @@ private[graft] object Statistics {
     // floor-6 after every step — DuckDB replays the identical three
     // unrolled CTE stages bit-for-bit.
     Query("x_logit_newton", (s, dir) => {
-      // label: purchase-heavy user (purchase share ≥ 1/5 of activity,
-      // integer test np·5 ≥ x — every user purchases SOMETHING in this
-      // corpus, so presence alone is degenerate); feature: total events
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("x"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("int").as("y"))
+      // label: the purchase-heavy user; feature: total events
+      val per = purchaseLabel(s, dir)
       val (hist, coef) = graft.ext.Stats.logisticIrls(per, col("x"), col("y"), 3)
       val fD = col("f").cast("double")
       hist.crossJoin(broadcast(coef))
@@ -1788,10 +1879,7 @@ private[graft] object Statistics {
     },
       // logistic IRLS: 3 unrolled Newton CTE stages (logitIters), final
       // clamped-sigmoid log-likelihood as a decimal sum
-      s"""WITH per AS (SELECT user_id, count(*) AS x,
-                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                              THEN 1 ELSE 0 END AS y
-                       FROM events GROUP BY 1),
+      s"""WITH ${purchaseLabelSql()},
                 h AS (SELECT x, y, count(*) AS f FROM per GROUP BY 1, 2),
                 cf0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, CAST(0.0 AS DOUBLE) AS b1),
                 $logitIters
@@ -1812,19 +1900,7 @@ private[graft] object Statistics {
     // the 2×2 disagreement counts — b, c, and χ² with/without continuity
     // correction from exact integers.
     Query("x_mcnemar", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("tot"),
-        countDistinct(col("day")).as("days"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("int").as("y"))
-      def lowerMedian(df: DataFrame, c: String): DataFrame = {
-        val h = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("f"))
-        val wc = Window.partitionBy(constKey(col("v"))).orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-        h.withColumn("cum", sum(col("f")).over(wc))
-          .withColumn("n", sum(col("f")).over(Window.partitionBy(constKey(col("f")))))
-          .filter(lit(2L) * col("cum") >= col("n"))
-          .agg(min(col("v")).as("med"))
-      }
+      val per = purchaseLabel(s, dir, "tot", Seq(countDistinct(col("day")).as("days")))
       val medTot = lowerMedian(per, "tot").select(col("med").as("med_tot"))
       val medDays = lowerMedian(per, "days").select(col("med").as("med_days"))
       val lab = per.crossJoin(broadcast(medTot)).crossJoin(broadcast(medDays))
@@ -1840,21 +1916,9 @@ private[graft] object Statistics {
     },
       // McNemar: histogram lower medians for both proxies, 2×2
       // disagreement counts, χ² with/without continuity from integers
-      s"""WITH per AS (SELECT user_id, count(*) AS tot,
-                         count(DISTINCT $dayE) AS days,
-                         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                              THEN 1 ELSE 0 END AS y
-                       FROM events GROUP BY 1),
-                ht AS (SELECT tot AS v, count(*) AS f FROM per GROUP BY 1),
-                ct AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                         CAST(sum(f) OVER () AS BIGINT) AS n FROM ht),
-                mt AS (SELECT min(v) AS med_tot FROM ct WHERE 2 * cum >= n),
-                hd AS (SELECT days AS v, count(*) AS f FROM per GROUP BY 1),
-                cd AS (SELECT v, CAST(sum(f) OVER (ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                         CAST(sum(f) OVER () AS BIGINT) AS n FROM hd),
-                md AS (SELECT min(v) AS med_days FROM cd WHERE 2 * cum >= n),
+      s"""WITH ${purchaseLabelSql("tot", Seq(s"count(DISTINCT $dayE) AS days"))},
+                ${lowerMedianSql("t", "tot")},
+                ${lowerMedianSql("d", "days")},
                 lab AS (SELECT
                           CASE WHEN (CASE WHEN tot >= med_tot THEN 1 ELSE 0 END) = y THEN 1 ELSE 0 END AS a_ok,
                           CASE WHEN (CASE WHEN days >= med_days THEN 1 ELSE 0 END) = y THEN 1 ELSE 0 END AS b_ok
@@ -1877,9 +1941,7 @@ private[graft] object Statistics {
     // principle applied to a recurrence); grid² join is |days|² metadata
     // per type. Scored by next-day mean absolute error.
     Query("x_forecast_ses", (s, dir) => {
-      val dc = events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")) - 1)
+      val dc = indexedDaily(s, dir)
       val a = dc.select(col("event_type"), col("idx").as("t"), col("day"))
       val b = dc.select(col("event_type"), col("idx").as("k"), col("c").as("xk"))
       val terms = a.join(b, "event_type").filter(col("k") <= col("t"))
@@ -1895,18 +1957,11 @@ private[graft] object Statistics {
       sm.join(nxt, Seq("event_type", "t"))
         .withColumn("abs_err",
           floor(abs(col("x_next").cast("double") - col("s")) * lit(1e6) + lit(0.5)) / lit(1e6))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_forecasts"),
-          (floor(sum(col("abs_err").cast("decimal(28,6)")).cast("double")
-            / count(lit(1)).cast("double") * lit(1e4) + lit(0.5)) / lit(1e4)).as("mae"))
-        .orderBy("event_type")
+        .transform(forecastMae)
     },
       // SES forecast: dyadic-weight closed form, floor-6 terms + decimal
       // sums, next-day MAE
-      s"""WITH dc AS (SELECT event_type, $dayE AS day, count(*) AS c FROM events GROUP BY 1, 2),
-                 ix AS (SELECT event_type, day, c,
-                          row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS idx
-                        FROM dc),
+      s"""WITH $indexedDailySql,
                  t AS (SELECT a.event_type, a.idx AS t, a.day, b.idx AS k, b.c AS xk
                        FROM ix a JOIN ix b ON a.event_type = b.event_type AND b.idx <= a.idx),
                  tm AS (SELECT event_type, t, day,
@@ -1938,11 +1993,8 @@ private[graft] object Statistics {
     // only data-scale work is the daily-count shuffle. Scored by
     // next-day MAE like SES, so the two models are directly comparable.
     Query("x_forecast_holt", (s, dir) => {
-      val dc = events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")) - 1)
-      val arr = dc.groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("idx"), col("c")))).as("a"))
+      val dc = indexedDaily(s, dir)
+      val arr = dailyArrays(dc)
       val tgt = dc.filter(col("idx") >= 1)
         .select(col("event_type"), col("idx").as("t"), col("c").as("x"))
       tgt.join(arr, "event_type")
@@ -1954,19 +2006,11 @@ private[graft] object Statistics {
                  'b', floor((0.5D * (floor((0.5D * CAST(e.c AS DOUBLE) + 0.5D * (st.l + st.b)) * 1e6 + 0.5D) / 1e6 - st.l) + 0.5D * st.b) * 1e6 + 0.5D) / 1e6))"""))
         .withColumn("abs_err",
           expr("floor(abs(CAST(x AS DOUBLE) - (st.l + st.b)) * 1e6 + 0.5) / 1e6"))
-        .groupBy("event_type").agg(
-          count(lit(1)).as("n_forecasts"),
-          (floor(sum(col("abs_err").cast("decimal(28,6)")).cast("double")
-            / count(lit(1)).cast("double") * lit(1e4) + lit(0.5)) / lit(1e4)).as("mae"))
-        .orderBy("event_type")
+        .transform(forecastMae)
     },
       // Holt: the same quantized recursion replayed by a recursive CTE
       // (per-row joins are legal there — only aggregates are not)
-      s"""WITH RECURSIVE dc AS (SELECT event_type, $dayE AS day, count(*) AS c
-                       FROM events GROUP BY 1, 2),
-                ix AS (SELECT event_type, day, c,
-                         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS idx
-                       FROM dc),
+      s"""WITH RECURSIVE $indexedDailySql,
                 r AS (SELECT event_type, 0 AS t, CAST(c AS DOUBLE) AS l, CAST(0.0 AS DOUBLE) AS b
                       FROM ix WHERE idx = 0
                       UNION ALL
@@ -1995,11 +2039,7 @@ private[graft] object Statistics {
     // accumulates the error series in-state — O(days) per type, and the
     // only data-scale work is the daily-count shuffle.
     Query("x_holt_winters", (s, dir) => {
-      val dc = events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")) - 1)
-      val arr = dc.groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("idx"), col("c")))).as("a"))
+      val arr = dailyArrays(indexedDaily(s, dir))
         .filter(size(col("a")) >= 8)
         .withColumn("l0", expr(
           "floor(aggregate(slice(a, 1, 7), CAST(0.0 AS DOUBLE), (s, e) -> s + CAST(e.c AS DOUBLE)) / 7.0 * 1e6 + 0.5) / 1e6"))
@@ -2018,21 +2058,13 @@ private[graft] object Statistics {
                'errs', concat(st.errs, array(
                  floor(abs(CAST(e.c AS DOUBLE) - (st.l + st.b + st.s7[0])) * 1e6 + 0.5D) / 1e6))))"""))
       folded.select(col("event_type"), explode(col("st.errs")).as("abs_err"))
-        .groupBy("event_type").agg(
-          count(lit(1)).as("n_forecasts"),
-          (floor(sum(col("abs_err").cast("decimal(28,6)")).cast("double")
-            / count(lit(1)).cast("double") * lit(1e4) + lit(0.5)) / lit(1e4)).as("mae"))
-        .orderBy("event_type")
+        .transform(forecastMae)
     },
       // Holt–Winters: the same 6-dp-quantized (level, trend, seasonal-7)
       // recursion replayed by a recursive CTE carrying the seasonal
       // buffer as a LIST (1-based: s7[1] = s_{t-7}; [2:7] + append
       // rotates)
-      s"""WITH RECURSIVE dc AS (SELECT event_type, $dayE AS day, count(*) AS c
-                       FROM events GROUP BY 1, 2),
-                ix AS (SELECT event_type, day, c,
-                         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS idx
-                       FROM dc),
+      s"""WITH RECURSIVE $indexedDailySql,
                 l0 AS (SELECT event_type,
                          floor(sum(CASE WHEN idx < 7 THEN CAST(c AS DOUBLE) ELSE 0.0 END) / 7.0 * 1e6 + 0.5) / 1e6 AS l0
                        FROM ix GROUP BY 1 HAVING count(*) >= 8),
@@ -2360,12 +2392,7 @@ private[graft] object Statistics {
       val xy = top
         .withColumn("x", f6(log(col("rnk").cast("double"))))
         .withColumn("y", f6(log(col("cnt").cast("double"))))
-      val st = xy.agg(
-        count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(28,6)")).cast("double").as("sx"),
-        sum(col("y").cast("decimal(28,6)")).cast("double").as("sy"),
-        sum(f6(col("x") * col("y")).cast("decimal(28,6)")).cast("double").as("sxy"),
-        sum(f6(col("x") * col("x")).cast("decimal(28,6)")).cast("double").as("sxx"))
+      val st = olsMoments(xy)
       val nD = col("n").cast("double")
       val slope = (nD * col("sxy") - col("sx") * col("sy")) /
         (nD * col("sxx") - col("sx") * col("sx"))
@@ -2381,12 +2408,7 @@ private[graft] object Statistics {
                  xy AS (SELECT floor(ln(CAST(rnk AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS x,
                                floor(ln(CAST(cnt AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS y
                         FROM top),
-                 st AS (SELECT count(*) AS n,
-                          CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-                          CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-                          CAST(sum(CAST(floor(x * y * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-                          CAST(sum(CAST(floor(x * x * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxx
-                        FROM xy)
+                 $olsMomentsSql
             SELECT n AS n_ranks,
                    floor(-((CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx)) * 1e4 + 0.5) / 1e4 AS zipf_s,
                    floor((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx)
@@ -2412,11 +2434,7 @@ private[graft] object Statistics {
       val nr = v.groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r"))
       val xy = nr.withColumn("x", f6(log(col("r").cast("double"))))
         .withColumn("y", f6(log(col("n_r").cast("double"))))
-      val st = xy.agg(count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(28,6)")).cast("double").as("sx"),
-        sum(col("y").cast("decimal(28,6)")).cast("double").as("sy"),
-        sum(f6(col("x") * col("y")).cast("decimal(28,6)")).cast("double").as("sxy"),
-        sum(f6(col("x") * col("x")).cast("decimal(28,6)")).cast("double").as("sxx"))
+      val st = olsMoments(xy)
       val nD = col("n").cast("double")
       val fit = st.select(
         (floor((nD * col("sxy") - col("sx") * col("sy"))
@@ -2444,12 +2462,7 @@ private[graft] object Statistics {
                  xy AS (SELECT floor(ln(CAST(r AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS x,
                                floor(ln(CAST(n_r AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS y
                         FROM nr),
-                 st AS (SELECT count(*) AS n,
-                          CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-                          CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-                          CAST(sum(CAST(floor(x * y * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-                          CAST(sum(CAST(floor(x * x * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxx
-                        FROM xy),
+                 $olsMomentsSql,
                  fit AS (SELECT floor((CAST(n AS DOUBLE) * sxy - sx * sy)
                            / (CAST(n AS DOUBLE) * sxx - sx * sx) * 1e4 + 0.5) / 1e4 AS b_loglog
                          FROM st),
@@ -2934,19 +2947,9 @@ private[graft] object Statistics {
     // follows the floor-6-term + decimal-sum discipline (a double mean
     // over rationals would be partition-order-dependent).
     Query("x_calibration", (s, dir) => {
-      val o = t(s, dir, "orders").join(
-        t(s, dir, "customer").select(col("c_custkey").as("o_custkey"),
-          col("c_nationkey"), col("c_mktsegment")), "o_custkey")
-        .select(col("o_orderkey"), col("c_nationkey"), col("c_mktsegment"),
-          (col("o_orderpriority") === "1-URGENT").cast("long").as("y"))
-      val rates = o.filter(col("o_orderkey") % 2 === 0)
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(sum(col("y")).as("u"), count(lit(1)).as("tot"))
-      val p = col("u").cast("double") / col("tot").cast("double")
-      val test = o.filter(col("o_orderkey") % 2 === 1)
-        .join(broadcast(rates), Seq("c_nationkey", "c_mktsegment"))
-        .select(col("y"), f6(p).as("p"),
-          least(floor(p * lit(10.0)), lit(9.0)).cast("int").as("bin"))
+      val test = urgentHoldout(s, dir)
+        .select(col("y"), f6(urgentP).as("p"),
+          least(floor(urgentP * lit(10.0)), lit(9.0)).cast("int").as("bin"))
       test.groupBy("bin").agg(
           count(lit(1)).as("n_b"),
           (sum(col("p").cast("decimal(28,6)")).cast("double") / count(lit(1))).as("conf_raw"),
@@ -2959,17 +2962,10 @@ private[graft] object Statistics {
       // Calibration: per-(nation, segment) urgent rates trained on even
       // order keys, decile reliability diagram on odd keys; conf is the
       // floor-6-term decimal-sum mean
-      """WITH o AS (SELECT o_orderkey, c_nationkey, c_mktsegment,
-                             CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y
-                      FROM orders JOIN customer ON o_custkey = c_custkey),
-                rates AS (SELECT c_nationkey, c_mktsegment,
-                                 CAST(sum(y) AS BIGINT) AS u, count(*) AS tot
-                          FROM o WHERE o_orderkey % 2 = 0 GROUP BY 1, 2),
-                test AS (SELECT y,
-                           floor(CAST(u AS DOUBLE) / CAST(tot AS DOUBLE) * 1e6 + 0.5) / 1e6 AS p,
-                           CAST(least(floor(CAST(u AS DOUBLE) / CAST(tot AS DOUBLE) * 10.0), 9.0) AS INT) AS bin
-                         FROM o JOIN rates USING (c_nationkey, c_mktsegment)
-                         WHERE o_orderkey % 2 = 1),
+      s"""WITH $urgentHoldoutSql,
+                test AS (SELECT y, floor(p * 1e6 + 0.5) / 1e6 AS p,
+                           CAST(least(floor(p * 10.0), 9.0) AS INT) AS bin
+                         FROM ho),
                 b AS (SELECT bin, count(*) AS n_b,
                         CAST(sum(CAST(p AS DECIMAL(28,6))) AS DOUBLE) / count(*) AS conf_raw,
                         CAST(sum(y) AS BIGINT) AS hits
@@ -2987,17 +2983,7 @@ private[graft] object Statistics {
     // from exact integer sums with one double division. The cumulative
     // window runs over that bounded grid, never over orders.
     Query("x_auc", (s, dir) => {
-      val o = t(s, dir, "orders").join(
-        t(s, dir, "customer").select(col("c_custkey").as("o_custkey"),
-          col("c_nationkey"), col("c_mktsegment")), "o_custkey")
-        .select(col("o_orderkey"), col("c_nationkey"), col("c_mktsegment"),
-          (col("o_orderpriority") === "1-URGENT").cast("long").as("y"))
-      val rates = o.filter(col("o_orderkey") % 2 === 0)
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(sum(col("y")).as("u"), count(lit(1)).as("tot"))
-      val test = o.filter(col("o_orderkey") % 2 === 1)
-        .join(broadcast(rates), Seq("c_nationkey", "c_mktsegment"))
-        .select(col("y"), (col("u").cast("double") / col("tot").cast("double")).as("p"))
+      val test = urgentHoldout(s, dir).select(col("y"), urgentP.as("p"))
       val g = test.groupBy("p").agg(count(lit(1)).as("np"), sum(col("y")).as("pos"))
       val cum = g.withColumn("cum", sum(col("np")).over(
           Window.partitionBy(constKey(col("p"))).orderBy("p").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -3010,17 +2996,9 @@ private[graft] object Statistics {
             / (lit(2L) * col("n1") * col("n0")).cast("double")).as("auc"))
     },
       // AUC: tie-adjusted Mann–Whitney over the prediction-value grid
-      """WITH o AS (SELECT o_orderkey, c_nationkey, c_mktsegment,
-                             CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y
-                      FROM orders JOIN customer ON o_custkey = c_custkey),
-                rates AS (SELECT c_nationkey, c_mktsegment,
-                                 CAST(sum(y) AS BIGINT) AS u, count(*) AS tot
-                          FROM o WHERE o_orderkey % 2 = 0 GROUP BY 1, 2),
-                test AS (SELECT y, CAST(u AS DOUBLE) / CAST(tot AS DOUBLE) AS p
-                         FROM o JOIN rates USING (c_nationkey, c_mktsegment)
-                         WHERE o_orderkey % 2 = 1),
+      s"""WITH $urgentHoldoutSql,
                 g AS (SELECT p, count(*) AS np, CAST(sum(y) AS BIGINT) AS pos
-                      FROM test GROUP BY 1),
+                      FROM ho GROUP BY 1),
                 r AS (SELECT pos, np,
                         2 * (sum(np) OVER (ORDER BY p ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - np)
                           + np + 1 AS r2
@@ -3042,18 +3020,8 @@ private[graft] object Statistics {
     // no sequential pooling loop is needed and every average is a ratio
     // of exact integer sums.
     Query("x_isotonic", (s, dir) => {
-      val o = t(s, dir, "orders").join(
-        t(s, dir, "customer").select(col("c_custkey").as("o_custkey"),
-          col("c_nationkey"), col("c_mktsegment")), "o_custkey")
-        .select(col("o_orderkey"), col("c_nationkey"), col("c_mktsegment"),
-          (col("o_orderpriority") === "1-URGENT").cast("long").as("y"))
-      val rates = o.filter(col("o_orderkey") % 2 === 0)
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(sum(col("y")).as("u"), count(lit(1)).as("tot"))
-      val p = col("u").cast("double") / col("tot").cast("double")
-      val bins = o.filter(col("o_orderkey") % 2 === 1)
-        .join(broadcast(rates), Seq("c_nationkey", "c_mktsegment"))
-        .select(col("y"), least(floor(p * lit(10.0)), lit(9.0)).cast("int").as("bin"))
+      val bins = urgentHoldout(s, dir)
+        .select(col("y"), least(floor(urgentP * lit(10.0)), lit(9.0)).cast("int").as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("nb"), sum(col("y")).as("hits"))
         .localCheckpoint() // reused by 3 bounded grid joins
       val ids = bins.select(col("bin").as("j"))
@@ -3072,16 +3040,10 @@ private[graft] object Statistics {
         .orderBy("bin")
     },
       // Isotonic PAV in minimax closed form on the bin grid
-      """WITH o AS (SELECT o_orderkey, c_nationkey, c_mktsegment,
-                             CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS y
-                      FROM orders JOIN customer ON o_custkey = c_custkey),
-                rates AS (SELECT c_nationkey, c_mktsegment,
-                                 CAST(sum(y) AS BIGINT) AS u, count(*) AS tot
-                          FROM o WHERE o_orderkey % 2 = 0 GROUP BY 1, 2),
-                bins AS (SELECT CAST(least(floor(CAST(u AS DOUBLE) / CAST(tot AS DOUBLE) * 10.0), 9.0) AS INT) AS bin,
+      s"""WITH $urgentHoldoutSql,
+                bins AS (SELECT CAST(least(floor(p * 10.0), 9.0) AS INT) AS bin,
                                 count(*) AS nb, CAST(sum(y) AS BIGINT) AS hits
-                         FROM o JOIN rates USING (c_nationkey, c_mktsegment)
-                         WHERE o_orderkey % 2 = 1 GROUP BY 1),
+                         FROM ho GROUP BY 1),
                 ids AS (SELECT a.bin AS j, b.bin AS k FROM bins a CROSS JOIN bins b WHERE a.bin <= b.bin),
                 seg AS (SELECT i.j, i.k,
                           CAST(sum(b.hits) AS DOUBLE) / CAST(sum(b.nb) AS DOUBLE) AS avgv
@@ -3883,21 +3845,8 @@ private[graft] object Statistics {
     // double ops on exact integers; numerator/denominator terms floor-6 +
     // DECIMAL-sum; the lag join is a grid equi-join on (type, day+lag).
     Query("x_acf", (s, dir) => {
-      val full = typeDayCounts(s, dir)
-      val mu = full.groupBy("event_type").agg(sum(col("c")).as("sc"), count(lit(1)).as("nd"))
-        .select(col("event_type"),
-          (col("sc").cast("double") / col("nd").cast("double")).as("mu"))
-      val x = full.join(broadcast(mu), "event_type")
-        .select(col("event_type"), to_date(col("day")).as("d"),
-          (col("c").cast("double") - col("mu")).as("dev"))
-      val den = x.groupBy("event_type").agg(sum(f6d(col("dev") * col("dev"))).as("den"))
-      val lagged = x.select(col("event_type").as("et2"), col("d").as("d2"), col("dev").as("dev2"))
-      val num = x.withColumn("lag", explode(array(Seq(1, 2, 3, 7).map(lit): _*)))
-        // (type, day+lag) is an equi-key: hash join, never a filtered grid
-        .join(lagged,
-          col("event_type") === col("et2") && col("d2") === date_add(col("d"), col("lag")))
-        .groupBy("event_type", "lag").agg(sum(f6d(col("dev") * col("dev2"))).as("num"))
-      num.join(broadcast(den), "event_type")
+      val (x, den) = typeDayDevs(s, dir)
+      lagNums(x, Seq(1, 2, 3, 7)).join(broadcast(den), "event_type")
         .select(col("event_type"), col("lag"),
           (floor(col("num").cast("double") / col("den").cast("double") * lit(1e4) + lit(0.5))
             / lit(1e4)).as("acf"))
@@ -3905,18 +3854,8 @@ private[graft] object Statistics {
     },
       // ACF: zero-completed type×day grid, floor-6 deviation products,
       // decimal sums, lag join on (type, day + lag)
-      s"""WITH $typeDayCountsSql,
-                 mu AS (SELECT event_type, CAST(sum(c) AS DOUBLE) / count(*) AS mu FROM f GROUP BY 1),
-                 x AS (SELECT f.event_type, CAST(f.day AS DATE) AS d, CAST(c AS DOUBLE) - mu AS dev
-                       FROM f JOIN mu USING (event_type)),
-                 den AS (SELECT event_type,
-                           sum(CAST(floor(dev * dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS den
-                         FROM x GROUP BY 1),
-                 num AS (SELECT a.event_type, l.lag,
-                           sum(CAST(floor(a.dev * b.dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS num
-                         FROM x a CROSS JOIN (VALUES (1), (2), (3), (7)) AS l(lag)
-                         JOIN x b ON b.event_type = a.event_type AND b.d = a.d + l.lag
-                         GROUP BY 1, 2)
+      s"""WITH $typeDayDevsSql,
+                 ${lagNumsSql(Seq(1, 2, 3, 7))}
             SELECT n.event_type, n.lag,
                    floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1e4 + 0.5) / 1e4 AS acf
             FROM num n JOIN den USING (event_type) ORDER BY event_type, lag"""),
@@ -3930,14 +3869,7 @@ private[graft] object Statistics {
     // per-type denominators broadcast. Day-grid bounded — metadata at
     // any corpus scale.
     Query("x_cross_corr", (s, dir) => {
-      val full = typeDayCounts(s, dir)
-      val mu = full.groupBy("event_type").agg(sum(col("c")).as("sc"), count(lit(1)).as("nd"))
-        .select(col("event_type"),
-          (col("sc").cast("double") / col("nd").cast("double")).as("mu"))
-      val x = full.join(broadcast(mu), "event_type")
-        .select(col("event_type"), to_date(col("day")).as("d"),
-          (col("c").cast("double") - col("mu")).as("dev"))
-      val den = x.groupBy("event_type").agg(sum(f6d(col("dev") * col("dev"))).as("den"))
+      val (x, den) = typeDayDevs(s, dir)
       val b = x.select(col("event_type").as("tb"), col("d").as("db"), col("dev").as("devb"))
       x.withColumn("lag", explode(array((-3 to 3).map(lit): _*)))
         .join(b, col("db") === date_add(col("d"), col("lag")) && col("event_type") < col("tb"))
@@ -3952,13 +3884,7 @@ private[graft] object Statistics {
         .orderBy("ta", "tb", "lag")
     },
       // cross-correlation: the ACF machinery on ordered type pairs
-      s"""WITH $typeDayCountsSql,
-                 mu AS (SELECT event_type, CAST(sum(c) AS DOUBLE) / count(*) AS mu FROM f GROUP BY 1),
-                 x AS (SELECT f.event_type, CAST(f.day AS DATE) AS d, CAST(c AS DOUBLE) - mu AS dev
-                       FROM f JOIN mu USING (event_type)),
-                 den AS (SELECT event_type,
-                           sum(CAST(floor(dev * dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS den
-                         FROM x GROUP BY 1),
+      s"""WITH $typeDayDevsSql,
                  num AS (SELECT a.event_type AS ta, b.event_type AS tb, l.lag,
                            sum(CAST(floor(a.dev * b.dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS num,
                            count(*) AS n_overlap
@@ -3981,20 +3907,8 @@ private[graft] object Statistics {
     // closed-form algebra is the identical IEEE op chain in both
     // engines; only the outputs floor-round to 4 dp.
     Query("x_pacf", (s, dir) => {
-      val full = typeDayCounts(s, dir)
-      val mu = full.groupBy("event_type").agg(sum(col("c")).as("sc"), count(lit(1)).as("nd"))
-        .select(col("event_type"),
-          (col("sc").cast("double") / col("nd").cast("double")).as("mu"))
-      val x = full.join(broadcast(mu), "event_type")
-        .select(col("event_type"), to_date(col("day")).as("d"),
-          (col("c").cast("double") - col("mu")).as("dev"))
-      val den = x.groupBy("event_type").agg(sum(f6d(col("dev") * col("dev"))).as("den"))
-      val lagged = x.select(col("event_type").as("et2"), col("d").as("d2"), col("dev").as("dev2"))
-      val num = x.withColumn("lag", explode(array(Seq(1, 2, 3).map(lit): _*)))
-        .join(lagged,
-          col("event_type") === col("et2") && col("d2") === date_add(col("d"), col("lag")))
-        .groupBy("event_type", "lag").agg(sum(f6d(col("dev") * col("dev2"))).as("num"))
-      val piv = num.groupBy("event_type").agg(
+      val (x, den) = typeDayDevs(s, dir)
+      val piv = lagNums(x, Seq(1, 2, 3)).groupBy("event_type").agg(
         max(when(col("lag") === 1, col("num"))).as("n1"),
         max(when(col("lag") === 2, col("num"))).as("n2"),
         max(when(col("lag") === 3, col("num"))).as("n3"))
@@ -4012,18 +3926,8 @@ private[graft] object Statistics {
         .orderBy("event_type")
     },
       // PACF: Durbin–Levinson closed forms over the raw ACF quotients
-      s"""WITH $typeDayCountsSql,
-                 mu AS (SELECT event_type, CAST(sum(c) AS DOUBLE) / count(*) AS mu FROM f GROUP BY 1),
-                 x AS (SELECT f.event_type, CAST(f.day AS DATE) AS d, CAST(c AS DOUBLE) - mu AS dev
-                       FROM f JOIN mu USING (event_type)),
-                 den AS (SELECT event_type,
-                           sum(CAST(floor(dev * dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS den
-                         FROM x GROUP BY 1),
-                 num AS (SELECT a.event_type, l.lag,
-                           sum(CAST(floor(a.dev * b.dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS num
-                         FROM x a CROSS JOIN (VALUES (1), (2), (3)) AS l(lag)
-                         JOIN x b ON b.event_type = a.event_type AND b.d = a.d + l.lag
-                         GROUP BY 1, 2),
+      s"""WITH $typeDayDevsSql,
+                 ${lagNumsSql(Seq(1, 2, 3))},
                  piv AS (SELECT event_type,
                            max(CASE WHEN lag = 1 THEN num END) AS n1,
                            max(CASE WHEN lag = 2 THEN num END) AS n2,
@@ -4573,11 +4477,7 @@ private[graft] object Statistics {
     // unsplittable nodes relational (no driver branching). Output: the
     // 3 internal splits + up to 4 leaves with majority votes.
     Query("x_decision_tree", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("x1"),
-        countDistinct(col("day")).as("x2"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("long").as("y"))
+      val per = purchaseLabel(s, dir, "x1", Seq(countDistinct(col("day")).as("x2")), "long")
       val h = per.groupBy("x1", "x2", "y").agg(count(lit(1)).as("f")).localCheckpoint()
       def xf(feat: Int) = if (feat == 1) col("x1") else col("x2")
       def bestSplit(hm: DataFrame): DataFrame = {
@@ -4660,10 +4560,7 @@ private[graft] object Statistics {
         }
         def left(sp: String) =
           s"CASE WHEN $sp.feat = 1 THEN h.x1 < $sp.thr ELSE h.x2 < $sp.thr END"
-        s"""WITH per AS (SELECT user_id, count(*) AS x1, count(DISTINCT $dayE) AS x2,
-                           CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5 >= count(*)
-                                THEN 1 ELSE 0 END AS y
-                         FROM events GROUP BY 1),
+        s"""WITH ${purchaseLabelSql("x1", Seq(s"count(DISTINCT $dayE) AS x2"))},
                 hist AS MATERIALIZED (SELECT x1, x2, y, count(*) AS f FROM per GROUP BY 1, 2, 3),
                 ${split("hist", "s1")},
                 hl AS MATERIALIZED (SELECT h.x1, h.x2, h.y, h.f FROM hist h CROSS JOIN s1
@@ -5271,9 +5168,7 @@ private[graft] object Statistics {
     // doubles in lockstep); corpus-scale work is only the daily-count
     // shuffle.
     Query("x_page_hinkley", (s, dir) => {
-      val dc = events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")) - 1)
+      val dc = indexedDaily(s, dir)
       val st = dc.groupBy("event_type").agg(count(lit(1)).as("n"), sum(col("c")).as("sx"))
       val arr = dc.join(broadcast(st), "event_type")
         .withColumn("xn", floor(col("c").cast("double") * col("n") / col("sx") * lit(1e9)
@@ -5465,9 +5360,7 @@ private[graft] object Statistics {
     // identical doubles. The pair grid is calendar²-bounded metadata —
     // corpus-scale work is only the daily-count shuffle.
     Query("x_matrix_profile", (s, dir) => {
-      val dc = events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")) - 1)
+      val dc = indexedDaily(s, dir)
       val arr = dc.groupBy("event_type").agg(count(lit(1)).cast("int").as("n"),
           expr("transform(sort_array(collect_list(struct(idx, c))), e -> e.c)").as("a"))
         .filter(col("n") >= 11)
@@ -5515,10 +5408,7 @@ private[graft] object Statistics {
       {
         val dist = (1 to 7).map(k =>
           s"(a.z[$k] - b.z[$k]) * (a.z[$k] - b.z[$k])").mkString(" + ")
-        s"""WITH dc AS (SELECT event_type, $dayE AS day, count(*) AS c FROM events GROUP BY 1, 2),
-                ix AS (SELECT event_type, c,
-                         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS idx
-                       FROM dc),
+        s"""WITH $indexedDailySql,
                 arr AS (SELECT event_type, CAST(count(*) AS INTEGER) AS n,
                           list(c ORDER BY idx) AS a
                         FROM ix GROUP BY 1 HAVING count(*) >= 11),
@@ -5694,10 +5584,7 @@ private[graft] object Statistics {
     // closed-form doubles over exact integers. The histogram is bounded
     // by the activity domain, not the user count.
     Query("x_gains_table", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-        count(lit(1)).as("x"),
-        (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-          .cast("long").as("y"))
+      val per = purchaseLabel(s, dir, yType = "long")
       val hist = per.groupBy("x").agg(count(lit(1)).as("f"), sum(col("y")).as("fp"))
       val tot = per.agg(count(lit(1)).as("nn"), sum(col("y")).as("pp"))
       val cum = hist.withColumn("cumf", sum(col("f")).over(Window.partitionBy(constKey(col("x"))).orderBy(col("x").desc)
@@ -5716,10 +5603,7 @@ private[graft] object Statistics {
         .orderBy("decile")
     },
       // gains table: upper-cum histogram deciles, integer capture counts
-      """WITH per AS (SELECT user_id, count(*) AS x,
-                        CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5
-                          >= count(*) THEN 1 ELSE 0 END AS y
-                      FROM events GROUP BY 1),
+      s"""WITH ${purchaseLabelSql()},
                 h AS (SELECT x, count(*) AS f, CAST(sum(y) AS BIGINT) AS fp FROM per GROUP BY 1),
                 tot AS (SELECT count(*) AS nn, CAST(sum(y) AS BIGINT) AS pp FROM per),
                 cm AS (SELECT h.*, tot.nn, tot.pp,
@@ -5746,14 +5630,7 @@ private[graft] object Statistics {
     // each Q term is floor-9 quantized then decimal-summed so the
     // 4-term reduction is aggregation-order-exact.
     Query("x_ljung_box", (s, dir) => {
-      val full = typeDayCounts(s, dir)
-      val mu = full.groupBy("event_type").agg(sum(col("c")).as("sc"), count(lit(1)).as("nd"))
-        .select(col("event_type"), col("nd"),
-          (col("sc").cast("double") / col("nd").cast("double")).as("mu"))
-      val x = full.join(broadcast(mu), "event_type")
-        .select(col("event_type"), col("nd"), to_date(col("day")).as("d"),
-          (col("c").cast("double") - col("mu")).as("dev"))
-      val den = x.groupBy("event_type").agg(sum(f6d(col("dev") * col("dev"))).as("den"))
+      val (x, den) = typeDayDevs(s, dir)
       val lagged = x.select(col("event_type").as("et2"), col("d").as("d2"), col("dev").as("dev2"))
       val acf = x.withColumn("lag", explode(array(Seq(1, 2, 3, 7).map(lit): _*)))
         .join(lagged,
@@ -5773,23 +5650,12 @@ private[graft] object Statistics {
         .orderBy("event_type")
     },
       // Ljung-Box: the x_acf pipeline + floor-9 decimal term sums
-      s"""WITH $typeDayCountsSql,
-                mu AS (SELECT event_type, count(*) AS nd,
-                         CAST(sum(c) AS DOUBLE) / count(*) AS mu FROM f GROUP BY 1),
-                x AS (SELECT f.event_type, mu.nd, CAST(f.day AS DATE) AS d,
-                        CAST(c AS DOUBLE) - mu.mu AS dev
-                      FROM f JOIN mu USING (event_type)),
-                den AS (SELECT event_type,
-                          sum(CAST(floor(dev * dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS den
-                        FROM x GROUP BY 1),
-                num AS (SELECT a.event_type, l.lag, max(a.nd) AS nd,
-                          sum(CAST(floor(a.dev * b.dev * 1e6 + 0.5) / 1e6 AS DECIMAL(28,6))) AS num
-                        FROM x a CROSS JOIN (VALUES (1), (2), (3), (7)) AS l(lag)
-                        JOIN x b ON b.event_type = a.event_type AND b.d = a.d + l.lag
-                        GROUP BY 1, 2),
-                r AS (SELECT n.event_type, n.lag, n.nd,
+      s"""WITH $typeDayDevsSql,
+                ${lagNumsSql(Seq(1, 2, 3, 7))},
+                nd AS (SELECT event_type, count(*) AS nd FROM f GROUP BY 1),
+                r AS (SELECT n.event_type, n.lag, nd.nd,
                         floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1e4 + 0.5) / 1e4 AS r
-                      FROM num n JOIN den USING (event_type)),
+                      FROM num n JOIN den USING (event_type) JOIN nd USING (event_type)),
                 q AS (SELECT event_type, max(nd) AS n_days,
                         sum(CAST(floor(r * r / CAST(nd - lag AS DOUBLE) * 1e9 + 0.5) / 1e9
                           AS DECIMAL(28,9))) AS terms
@@ -5805,9 +5671,7 @@ private[graft] object Statistics {
     // one compact word per type; everything is grid metadata after the
     // daily-count shuffle.
     Query("x_sax_symbols", (s, dir) => {
-      val dc = events(s, dir).groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")) - 1)
+      val dc = indexedDaily(s, dir)
       val st = dc.groupBy("event_type").agg(count(lit(1)).as("n"), sum(col("c")).as("sx"),
         sum(col("c") * col("c")).as("sxx"))
       val z = dc.join(broadcast(st), "event_type")
@@ -5830,10 +5694,7 @@ private[graft] object Statistics {
         .orderBy("event_type")
     },
       // SAX: floor-6 z, floor-4 PAA means, +-0.4307 alphabet
-      s"""WITH dc AS (SELECT event_type, $dayE AS day, count(*) AS c FROM events GROUP BY 1, 2),
-                ix AS (SELECT event_type, c,
-                         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS idx
-                       FROM dc),
+      s"""WITH $indexedDailySql,
                 st AS (SELECT event_type, count(*) AS n, CAST(sum(c) AS BIGINT) AS sx,
                          CAST(sum(c * c) AS BIGINT) AS sxx FROM dc GROUP BY 1),
                 z AS (SELECT ix.event_type, CAST(idx // 7 AS INTEGER) AS seg,
@@ -6043,10 +5904,7 @@ private[graft] object Statistics {
     // steps exchanging 5 decimal sums over the (x, y) histogram; the
     // decile grid rides the bounded activity histogram.
     Query("x_uplift_tlearner", (s, dir) => {
-      val per = events(s, dir).groupBy("user_id").agg(
-          count(lit(1)).as("x"),
-          (sum((col("event_type") === "purchase").cast("long")) * 5 >= count(lit(1)))
-            .cast("int").as("y"))
+      val per = purchaseLabel(s, dir)
         .withColumn("treat", col("user_id") % 2 === 1)
         .localCheckpoint()
       val (_, coefT) = graft.ext.Stats.logisticIrls(per.filter(col("treat")), col("x"), col("y"), 3)
@@ -6069,11 +5927,7 @@ private[graft] object Statistics {
         .orderBy("decile")
     },
       // T-learner: two logitChain fits + the decile grid
-      s"""WITH per AS (SELECT user_id, count(*) AS x,
-                        CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 5
-                          >= count(*) THEN 1 ELSE 0 END AS y,
-                        user_id % 2 = 1 AS treat
-                      FROM events GROUP BY 1),
+      s"""WITH ${purchaseLabelSql(more = Seq("user_id % 2 = 1 AS treat"))},
                 ht AS (SELECT x, y, count(*) AS f FROM per WHERE treat GROUP BY 1, 2),
                 hc AS (SELECT x, y, count(*) AS f FROM per WHERE NOT treat GROUP BY 1, 2),
                 t0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0, CAST(0.0 AS DOUBLE) AS b1),

@@ -8,6 +8,9 @@ A and B are the saved stdout of `graft.Explain <sfDir> [names...]`: one
 section is normalized so that only the plan's shape counts:
   - expression ids (`#123`) and `plan_id=123` are dropped;
   - lambda class suffixes (`$Lambda$123/0x7f...@1a2b`) are dropped;
+  - the numbering of higher-order-function variables (`lambda x_12`) and
+    of RDDs (`MapPartitionsRDD[731]`) is dropped: both count up across
+    the JVM, so they depend on what ran before;
   - `<File>.scala:<line>` call sites are dropped;
   - the owner `graft.SparkEntry` and any family object
     `graft.queries.<Family>` read as the same name, so a query that moved
@@ -24,6 +27,8 @@ NORMALIZE = [
     (re.compile(r"\$Lambda(\$\d+)?/0x[0-9a-f]+(@[0-9a-f]+)?"), "$Lambda"),
     (re.compile(r"#\d+L?"), ""),
     (re.compile(r"plan_id=\d+"), "plan_id"),
+    (re.compile(r"\blambda ([A-Za-z]\w*?)_\d+\b"), r"lambda \1"),
+    (re.compile(r"\b([A-Za-z]*RDD)\[\d+\]"), r"\1[]"),
     (re.compile(r"\b[A-Za-z0-9_]+\.scala:\d+"), "<site>"),
     (re.compile(r"\bgraft\.(SparkEntry|queries\.[A-Z][A-Za-z0-9_]*)\b"), "graft.<owner>"),
 ]
